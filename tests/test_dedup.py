@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import functions as F
 
 from trading_etl_python_spark.operators import dedup as D
@@ -597,3 +599,24 @@ def test_cc_fold_matches_star_loop_exactly(spark):
     assert lab[20] == lab[21] == lab[22] == 20
     assert lab[30] == lab[31] == lab[32] == lab[33] == 30
     assert lab[39] == 39
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=CapturedException,
+    reason="CC fold round count is not a bound on random-id chains",
+)
+def test_cc_fold_random_id_path(spark):
+    """One 64-node path with shuffled ids: min-label propagation with
+    one pointer jump per round needs far more than ceil(log2(2E+2))+4
+    rounds here, so the in-row fold's fixpoint check raises 'no fixpoint
+    within round bound'.  Correct labels put every node in the cluster
+    of the smallest id."""
+    import random
+
+    ids = list(range(64))
+    random.Random(3).shuffle(ids)
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "doc_a long, doc_b long")
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = {r.doc_id: r.cluster_id for r in D.dedup_clusters(docs, pairs=pairs).collect()}
+    assert got == {i: 0 for i in ids}

@@ -58,18 +58,7 @@ def main() -> int:
     if len(QUERIES) != len(ORACLES):
         print(f"queries {len(QUERIES)} != oracles {len(ORACLES)}")
         bad = True
-    # every entry must carry a valid tier (r8 VERDICT #4)
-    no_tier = sorted(q for q in registry if q not in TIERS)
-    bad_tier = sorted(
-        q for q, t in TIERS.items()
-        if t not in ("production", "measurement", "demo")
-    )
-    if no_tier:
-        print(f"NO TIER ({len(no_tier)}): {no_tier}")
-        bad = True
-    if bad_tier:
-        print(f"INVALID TIER: {bad_tier}")
-        bad = True
+    # tier completeness and validity are asserted at suite import
     counts = {t: sum(1 for v in TIERS.values() if v == t)
               for t in ("production", "measurement", "demo")}
     print("tiers: " + ", ".join(f"{n} {t}" for t, n in counts.items()))

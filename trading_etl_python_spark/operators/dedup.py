@@ -647,12 +647,13 @@ def _cc_fold_labels(C: DataFrame, n_edges: int) -> DataFrame:
     """Small-graph connected components as ONE in-row fold (r14, the
     graph.py fold family): pack the (pre-counted, tiny) edge set into a
     single row and iterate `label[i] <- min(label[i], label[label[i]],
-    min over neighbors j of label[j])` — neighbor-min propagation plus
-    one pointer-jump per round, the doubling argument that makes
-    distance-to-minimum grow geometrically, for 2*ceil(log2(2E+2))+4
-    rounds.  Correctness does NOT rest on the round bound: the final
-    labels are re-checked against one more step IN-ROW and the query
-    raises (raise_error) if they are not a fixpoint — and at a fixpoint
+    min over neighbors j of label[j])` — min-label propagation plus one
+    pointer jump per round, for ceil(log2(2E+2))+4 rounds.  That count
+    is NOT a proven bound: the jump only doubles when ids grow along
+    the path (sorted-id chains); with shuffled ids the recurrence has
+    no log bound, and a 64-node path with random ids exhausts it.  The
+    final labels are re-checked against one more step IN-ROW and the
+    query raises (raise_error) if they are not a fixpoint — at a fixpoint
     adjacent labels are equal (else the neighbor-min would change one)
     while the component-minimum node keeps its own id (labels never go
     below the component min), so fixpoint == component-min labels.
@@ -686,12 +687,12 @@ def _cc_fold_labels(C: DataFrame, n_edges: int) -> DataFrame:
             ),
         )
 
-    # doubling bound: the jump makes distance-to-minimum grow
-    # geometrically, so ceil(log2(component size)) rounds suffice; +4
-    # slack.  HOF evaluation is interpreted, so the expression is
-    # staged through PROJECTION boundaries below — the fold evaluates
-    # exactly once, the fixpoint re-check exactly once (CollapseProject
-    # keeps multiply-referenced non-cheap aliases apart).
+    # heuristic round count, not a bound (see the docstring); a
+    # non-fixpoint raises below.  HOF evaluation is interpreted, so the
+    # expression is staged through PROJECTION boundaries below — the
+    # fold evaluates exactly once, the fixpoint re-check exactly once
+    # (CollapseProject keeps multiply-referenced non-cheap aliases
+    # apart).
     rounds = math.ceil(math.log2(2 * n_edges + 2)) + 4
     init = F.transform(F.col("g"), lambda x: x["_i"])
     folded = F.aggregate(

@@ -1,7 +1,7 @@
 """Query suite: every implemented operator exposed as a named query
 (SURVEY.md §2 inventory) with, where SQL-expressible, a DuckDB oracle
 that reproduces the exact semantics (driver contract in
-/root/repo/__spark_entry__.py).
+__spark_entry__.py).
 
 Numeric-parity rules shared by builders and oracles (see operators/
 windows.py docstring and the PLANS.md §62 rulebook): deterministic
@@ -17,7 +17,10 @@ boundary argument is exact.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +33,7 @@ ORACLES: dict[str, str] = {}
 #: per-query scale-posture tier (r8 VERDICT #4): "production" |
 #: "measurement" | "demo" — see the q() decorator docstring.  Consumed
 #: by tools/sweep.py --compare (only production superlinearity is a
-#: defect) and enforced complete by tools/lint_registry.py.
+#: defect) and enforced complete by the assert below.
 TIERS: dict[str, str] = {}
 
 for mod in (core, relational, extensions, analytics, behavior, sql_api):
@@ -42,413 +45,44 @@ _VALID_TIERS = {"production", "measurement", "demo"}
 assert set(TIERS) == set(_ALL) and set(TIERS.values()) <= _VALID_TIERS
 
 # Registry order = driver-certification rotation.  The external driver
-# records CORRECTNESS rows for only the FIRST ~50 registry entries per
-# round.  Cumulative state entering round 8: 305 registry queries, 275
-# driver-sampled, 275 latest-green, ZERO ever-red outstanding
-# (CORRECTNESS_r07: 50/50 pass incl. the two rebuilt ever-reds).  The
-# r7 window covered _FIXED_R7 (2) + _PENDING_R6[:48] (through q_hurst
-# — the driver json is authoritative; the r7 NOTE's "through
-# q_underwater" was off by two).  Round 8 front-loads, per the r7
-# VERDICT mandate: the 18 never-sampled r6-born entries
-# (q_runs_test..q_hourly_profile), then the 12 r7-born entries, then
-# r8 births (containment/verify df-cap twins + MinHash graph twins for
-# triangles/communities), then the oldest stale greens.
-_FIXED_R7 = [
-    "q_spearman",      # r5+r6 red -> integer doubled-rank moments, no ROUND(CORR)
-    "q_dsir_weights",  # r6 red -> 1e-6-quantized log-ratios, FLOOR-pattern mean
-]
-# r6-certified head: the 5 r6 re-certifications (minus q_spearman, red)
-# and the first 45 r6-born entries the r6 window actually sampled
-# (minus q_dsir_weights, red) — all green, rotate with the r6 block.
-_CERTIFIED_R6 = [
-    "q_embed_neardup", "q_triangles", "q_props_variant", "q_bloom_semi",
-    "q_media_png", "q_media_png_dhash", "q_event_runs", "q_concurrency",
-    "q_delta_encode", "q_rank_pct", "q_date_features", "q_entropy_profile",
-    "q_hash_tf", "q_stream_candles", "q_scd2", "q_hopping_window",
-    "q_zscore", "q_label_encode", "q_prefix_jaccard", "q_stream_join",
-    "q_sharpe", "q_tar_writer", "q_table_diff", "q_merge_upsert",
-    "q_ichimoku", "q_pivot_points", "q_var_es", "q_acf", "q_ewma_vol",
-    "q_volume_profile", "q_pairs_spread", "q_moments",
-    "q_ewma_sql", "q_hll_union", "q_logreg_quality", "q_gopher_rules",
-    "q_stream_dedup", "q_bucket_join", "q_schema_evolution", "q_pit_join",
-    "q_willr", "q_cmf", "q_ad_line", "q_ultimate", "q_aroon",
-    "q_keltner", "q_holt", "q_force_index",
-]
-# The 66 r6-born queries with NO driver row yet (r6 window overflow,
-# q_rake .. q_hourly_profile in birth order) — the r7 window's body.
-_PENDING_R6: list[str] = [
-    "q_rake", "q_linkage", "q_mmr",
-    "q_trix", "q_supertrend", "q_amihud", "q_roll_spread", "q_holt_eval",
-    "q_kalman", "q_ols_trend", "q_dow_returns", "q_leadlag",
-    "q_wordpiece", "q_portfolio_nav", "q_tfidf_cosine",
-    "q_garch", "q_candle_patterns", "q_fractals",
-    "q_yoy_growth", "q_benford", "q_knn_classify", "q_backtest_ma",
-    "q_welch_ttest", "q_mannwhitney", "q_chi2", "q_pr_curve",
-    "q_basket_rules", "q_rfm", "q_pareto_abc", "q_gini_hhi",
-    "q_vortex", "q_psar", "q_kama", "q_tsi",
-    "q_attribution", "q_kaplan_meier", "q_ab_test", "q_cusum",
-    "q_flesch", "q_zipf", "q_sentiment", "q_textrank",
-    "q_sortino", "q_calmar", "q_info_ratio", "q_omega",
-    "q_vratio", "q_hurst", "q_runs_test", "q_underwater",
-    "q_hits", "q_kcore", "q_clustering_coef", "q_degree_assort",
-    "q_decompose", "q_breadth", "q_ulcer", "q_cmo",
-    "q_streaks", "q_month_effect", "q_topk_days", "q_rel_strength",
-    "q_markov", "q_inter_event", "q_cohort_value", "q_hourly_profile",
-]
-# Queries BORN in r7, never driver-sampled — r8 window body part 2.
-# All locally 3-SF-gated AND jitter-certified
-# (sweeps/r7_jitter_full_sf001.log).  Any new judged float aggregate
-# must follow PLANS.md §62 (quantize to integer units or document
-# exactness) BEFORE registration.
-_NEW_R7: list[str] = [
-    "q_kcore_minhash", "q_clustering_minhash", "q_assort_minhash",
-    "q_stream_topk", "q_silhouette", "q_cluster_stats", "q_minhash_eval",
-    "q_eval_contam_rate", "q_token_psi", "q_stream_drift",
-    "q_stream_cardinality", "q_stream_ingest",
-]
-# r5-certified block (fresh greens, rotate last among certified).
-_CERTIFIED_R5 = [
-    "q_pca_power", "q_group_sample", "q_bpe_learn", "q_fuzzy_vocab",
-    "q_ann_recall", "q_ks_drift", "q_token_pmi", "q_zorder", "q_skip_read",
-    "q_bpe_apply", "q_tar_shards", "q_pq_error", "q_pq_topk",
-    "q_ann_ivfpq", "q_cm_sketch", "q_hll_portable", "q_kmeans_fit3",
-    "q_cdc_incremental", "q_semdedup_joined", "q_hist_quantiles",
-    "q_sql_tpch_q2", "q_sql_tpch_q9", "q_sql_tpch_q11", "q_sql_tpch_q16",
-    "q_sql_tpch_q20", "q_salted_join", "q_doc_chunks", "q_stream_sessions",
-    "q_backfill_job", "q_backfill_incremental", "q_tar_datasource",
-    "q_grouping_explicit",
-]
-# r4-certified blocks, kept in their r4 order.
-_CERTIFIED_R4 = [
-    "q_doc_fingerprint", "q_doc_winnow", "q_tfidf", "q_doc_repetition",
-    "q_split_assign", "q_sample_profile", "q_group_quantiles",
-    "q_stream_replay", "q_approx_stats", "q_multimodal_meta",
-    "q_media_frames", "q_media_features", "q_histogram", "q_null_profile",
-    "q_text_normalize", "q_stratified_sample", "q_regex_extract",
-    "q_sql_tpch_q12", "q_dedup_minhash_ml", "q_dedup_clusters",
-    "q_text_redact", "q_seq_pack", "q_doc_logprob", "q_dedup_incremental",
-    "q_span_dedup", "q_domain_mix", "q_embed_quantize", "q_heavy_hitters",
-    "q_pagerank", "q_bm25", "q_ppl_tiers", "q_weighted_sample",
-    "q_hard_negatives", "q_media_dhash", "q_media_dhash_pairs", "q_bigram_next",
-    "q_communities", "q_psi_drift", "q_media_wav", "q_table_stats",
-    "q_split_leakage", "q_dedup_containment", "q_dup_weights", "q_epoch_order",
-    "q_asof_forward", "q_asof_nearest",
-    "q_semdedup", "q_bpe_pairs", "q_cdc_dedup",
-]
-# r7-certified block (CORRECTNESS_r07: 50/50 green) — freshest greens,
-# rotate last.
-_CERTIFIED_R7 = [*_FIXED_R7, *_PENDING_R6[:48]]
-# The 18 r6-born entries the r7 window never reached — r8 window body
-# part 1 (q_runs_test..q_hourly_profile, birth order).
-_PENDING_R8 = _PENDING_R6[48:]
-# Queries BORN in r8 (appended as each lands; after the backlog, per
-# the r7 VERDICT: new births only in service of its items 2–5).
-# r9 NOTE: the r8 window (~50) covers _PENDING_R8 (18) + _NEW_R7 (12)
-# + _NEW_R8 (4) + the first ~16 stale r2-greens (q_json_decode ..
-# q_latest_per_key).  If CORRECTNESS_r08 is all green the ever-green
-# ledger is COMPLETE (309/309 driver-proven at least once).  Round 9
-# should front-load: any r8 reds (rebuild per PLANS.md §62 first),
-# then r9 births, then continue the stale-green refresh from where the
-# r8 window stopped (core tail q_time_range.., then relational, r4,
-# r5, r6, r7 blocks — oldest certification first).  All 309 entries
-# passed the r8 full-registry jitter gate (sweeps/r8_jitter_full_
-# sf001.log) and the r8 full sweep at sf0.1+sf1 (0 errors).
-_NEW_R8: list[str] = [
-    "q_containment_capped",  # VERDICT #2: df-cap + block bound, 1.81x at 10x
-    "q_minhash_banded_verified",  # VERDICT #3: AND-banded cands + exact verify, 1.4x
-    "q_triangles_minhash",    # VERDICT #4: triangles on banded edges, 1.22x at 10x
-    "q_communities_minhash",  # VERDICT #4: LPA on banded edges, 1.45x at 10x
-]
-_HEAD_SET = {*_CERTIFIED_R7, *_CERTIFIED_R6, *_PENDING_R8, *_NEW_R7,
-             *_NEW_R8}
-_PRIORITY_R8 = [
-    *_PENDING_R8,  # 18 never-sampled r6-born queries, oldest first
-    *_NEW_R7,      # 12 never-sampled r7-born queries
-    *_NEW_R8,      # r8 births (VERDICT items 2-4)
-    # stale greens refresh the tail: oldest (r2/r3 core+relational)
-    # first, then r4, r5, r6, r7 blocks
-    *(n for n in core.QUERIES
-      if n not in _CERTIFIED_R4 and n not in _CERTIFIED_R5
-      and n not in _HEAD_SET),
-    *(n for n in relational.QUERIES
-      if n not in _CERTIFIED_R4 and n not in _CERTIFIED_R5
-      and n not in _HEAD_SET),
-    *(n for n in _CERTIFIED_R4 if n not in _HEAD_SET),
-    *(n for n in _CERTIFIED_R5 if n not in _HEAD_SET),
-    *_CERTIFIED_R6,
-    *_CERTIFIED_R7,
-]
+# certifies only the FIRST ~50 registry entries per round, so QUERIES is
+# the registry sorted by (not pending, last_cert, registration position):
+# queries whose builder or oracle changed since their last green
+# certification lead, then the stalest certifications, oldest first.
+# last_cert is read at import from the repo-root CORRECTNESS_r*.json
+# files; when they are absent (e.g. an installed package) the ledger is
+# empty and the order falls back to registration order.
+def _last_cert(repo: Path) -> dict[str, int]:
+    """Query -> highest round whose driver row was green: rows_match and
+    schema_match hold and hash_match is true or absent (the driver
+    records no hash for rows-only entries)."""
+    last: dict[str, int] = {}
+    for path in repo.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name).group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if (row.get("rows_match") and row.get("schema_match")
+                    and row.get("hash_match") in (True, None)):
+                last[name] = max(rnd, last.get(name, 0))
+    return last
 
-assert len(_PRIORITY_R8) == len(set(_PRIORITY_R8)) and all(
-    n in _ALL for n in _PRIORITY_R8
-)
 
-# Full r8-era registry order (the r8 window = its first 50 entries).
-_ORDER_R8: list[str] = list(dict.fromkeys(
-    [*_PRIORITY_R8, *extensions.QUERIES, *_ALL]
-))
+# Query -> the round whose certification first covers its changed
+# builder or oracle.  Add an entry when either changes; it stops leading
+# by itself once that round's CORRECTNESS file certifies it.
+_TOUCHED: dict[str, int] = {}
+assert set(_TOUCHED) <= set(_ALL)
 
-# The 50 entries CORRECTNESS_r08 certified (all green) — the freshest
-# certifications in the ledger, rotated to the BACK for r9.
-_SAMPLED_R8 = [
-    "q_runs_test", "q_underwater", "q_hits", "q_kcore",
-    "q_clustering_coef", "q_degree_assort", "q_decompose", "q_breadth",
-    "q_ulcer", "q_cmo", "q_streaks", "q_month_effect", "q_topk_days",
-    "q_rel_strength", "q_markov", "q_inter_event", "q_cohort_value",
-    "q_hourly_profile", "q_kcore_minhash", "q_clustering_minhash",
-    "q_assort_minhash", "q_stream_topk", "q_silhouette",
-    "q_cluster_stats", "q_minhash_eval", "q_eval_contam_rate",
-    "q_token_psi", "q_stream_drift", "q_stream_cardinality",
-    "q_stream_ingest", "q_containment_capped",
-    "q_minhash_banded_verified", "q_triangles_minhash",
-    "q_communities_minhash", "q_json_decode", "q_error_isolation",
-    "q_format_roundtrip", "q_rename_project", "q_null_filter",
-    "q_epoch_convert", "q_tick_widen", "q_upsert_ignore", "q_sma",
-    "q_bbands", "q_stoch", "q_mfi", "q_obv", "q_vwap", "q_warmup_gate",
-    "q_latest_per_key",
-]
 
-# Queries BORN in r9 (per the r8 VERDICT: births only in service of
-# its items 2-6).
-_NEW_R9: list[str] = [
-    "q_prefix_jaccard_capped",  # VERDICT #5: df-cap + block bound for the AllPairs family
-    "q_semdedup_scaled",        # VERDICT #3: multi-cell literal pin (64 cells)
-]
-# Queries whose BUILDER OR ORACLE changed this round (r8 VERDICT items
-# 2/3/6/7) — certified green before, but on the OLD semantics, so they
-# must re-certify inside the r9 window:
-#   - curation compositions rewired onto the banded-MinHash pair source
-#     (VERDICT #2): q_corpus_pipeline, q_corpus_full, q_dedup_clusters,
-#     and q_dup_weights (dup_aware_weights rides dedup_clusters' default)
-#   - semdedup corpus-scaled n_cells default (VERDICT #3): q_semdedup,
-#     q_semdedup_joined
-#   - block-sampled exact side (VERDICT #6): q_minhash_eval
-#   - in-row entropy rewrite (VERDICT #7, adopted — 29x at sf1):
-#     q_entropy_profile
-_REWIRED_R9: list[str] = [
-    "q_corpus_pipeline", "q_corpus_full", "q_dedup_clusters",
-    "q_dup_weights", "q_semdedup", "q_semdedup_joined",
-    "q_minhash_eval", "q_entropy_profile",
-]
-# r10 NOTE: the r9 window (~50) = _NEW_R9 (2) + _REWIRED_R9 (8) + the
-# stalest greens in _ORDER_R8 order (r2-era core tail from
-# q_lookback_trim/q_time_range + the recursive family q_ema/q_rsi/
-# q_macd/q_atr/q_adx + relational + the r4 block head).  Round 10
-# front-loads: any r9 reds (rebuild per PLANS.md §62 first), then r10
-# births, then the stale refresh continues from where the r9 window
-# stopped (the _ORDER_R8 tail minus everything r8/r9-sampled — r4
-# block tail, r5, r6, r7 blocks — with _SAMPLED_R8 and the r9 window
-# rotated to the back, oldest certification always first).
-_head = {*_NEW_R9, *_REWIRED_R9}
-_sampled_r8 = set(_SAMPLED_R8)
-# Full r9-era registry order (the r9 window = its first 50 entries;
-# CORRECTNESS_r09 certified exactly that slice, 50/50 green).
-_ORDER_R9 = [
-    *_NEW_R9,
-    *_REWIRED_R9,
-    *(n for n in _ORDER_R8 if n not in _sampled_r8 and n not in _head),
-    *(n for n in _ORDER_R8 if n in _sampled_r8 and n not in _head),
-]
+def _rotation(names: list[str], last_cert: dict[str, int],
+              touched: dict[str, int]) -> list[str]:
+    """`names` (registration order) pending-first, then by last green
+    round; the stable sort keeps registration order on ties."""
+    return sorted(names, key=lambda n: (
+        touched.get(n, 0) <= last_cert.get(n, 0), last_cert.get(n, 0)))
 
-# The 50 entries CORRECTNESS_r09 certified (all green) — freshest
-# certifications, rotated to the BACK for r10.
-_SAMPLED_R9 = _ORDER_R9[:50]
 
-# Queries BORN in r10 (per the r9 VERDICT #7: births only in service
-# of its items 1/4; #1 resolved without a birth — the 7.44x was a
-# measurement artifact, see BASELINE.md r10).  q_semdedup_capped is
-# the one birth, in service of #6's FINDING: the balance measurement
-# exposed cell skew (sum|c|^2, not N^2/K) as the real pair-join
-# governor, and the cap is its bounded production treatment.
-_NEW_R10: list[str] = [
-    "q_semdedup_capped",  # VERDICT #6 finding: skew-bounded pair space
-]
-
-# r11 NOTE: the r10 window (~50) = _NEW_R10 + the stalest greens in
-# _ORDER_R9 order (r4-block tail from q_text_redact/q_seq_pack, then
-# the r5/r6/r7 blocks — 84 entries were at r4-or-older certification
-# entering r10).
-_sampled_r9 = set(_SAMPLED_R9)
-_ORDER_R10 = [
-    *_NEW_R10,
-    *(n for n in _ORDER_R9 if n not in _sampled_r9 and n not in set(_NEW_R10)),
-    *(n for n in _ORDER_R9 if n in _sampled_r9 and n not in set(_NEW_R10)),
-]
-
-# r11 (r10 VERDICT #1): the stale-refresh tail is now ordered by ACTUAL
-# last-certified round — the per-query maximum green round aggregated
-# from the CORRECTNESS_r*.json files themselves (tools/cert_ledger.py
-# regenerates _cert_ledger.py after each round; the structural
-# _ORDER_R8-position proxy had drifted ~3 windows from real age: the
-# r2-era core entries sat at positions 156-166 while r5/r6-era greens
-# were about to re-certify).  Front matter stays explicit: reds-to-
-# rebuild first (none for r10 — 50/50 green), then births, then
-# queries whose builder or oracle SEMANTICS changed this round (their
-# old certification no longer covers them), then everything else
-# oldest-cert-first with the r10 registry position as the stable
-# tiebreak.  The r11 window (first 50) = 1 rewired + the 11 r2-era +
-# the first 38 r3-era entries.
-from ._cert_ledger import LAST_CERT  # noqa: E402
-
-# Queries BORN in r11 (r10 VERDICT #7: births only in service of its
-# items 2-4).
-#   - q_media_dhash_pairs_exact: VERDICT #3 — the quiet re-measure
-#     confirmed the dhash pair join >4x warm at 10x data (one band key
-#     held 38% of the sf1 corpus), so the production entry gained the
-#     semdedup-style bucket bound and this twin preserves the exact/
-#     unbounded semantics at measurement tier.
-#   - q_semdedup_fixedk: VERDICT #4 — the sf1->sf10 sweep measured the
-#     auto-K semdedup family at its designed ~N^1.5 balance law (29.7x
-#     for 10x data); this entry pins BOTH knobs (n_cells=64,
-#     max_cell=64), the paper's own fixed-budget regime, making total
-#     work linear in N — the production lever when N^1.5 exceeds a
-#     fixed compute budget.
-_NEW_R11: list[str] = ["q_media_dhash_pairs_exact", "q_semdedup_fixedk"]  # noqa: F841 (kept for the r11 window note above)
-# Builder-or-oracle semantics changed in r11, so the old cert is void:
-#   - q_semdedup now defaults to the auto skew bound max_cell="auto"
-#     (r10 VERDICT #2); builder AND oracle both carry the 4*ceil(N/K)
-#     sub-split derivation.
-#   - q_media_dhash_pairs now defaults to the auto bucket bound
-#     max_bucket="auto" (r10 VERDICT #3); builder AND oracle both carry
-#     the 4*ceil(sqrt(N)) per-(band,key) sub-split derivation.
-_REWIRED_R11: list[str] = ["q_semdedup", "q_media_dhash_pairs"]  # noqa: F841
-_ORDER_R11: list[str] = [
-    *_NEW_R11,
-    *_REWIRED_R11,
-    *sorted(
-        (n for n in _ORDER_R10 if n not in {*_NEW_R11, *_REWIRED_R11}),
-        key=lambda n: (LAST_CERT.get(n, 0), _ORDER_R10.index(n)),
-    ),
-]
-# r12: no births; ONE semantics rewire, then the window is the
-# ledger-computed oldest entries (r11 VERDICT #4: "verifiable in
-# advance").  The r11 head entries were all certified green in the r11
-# window, so the ledger itself now sends them to the back.  _ORDER_R11
-# (head + ledger-sorted tail, deterministic given the checked-in
-# ledger) is kept only as the stable tiebreak for equal-round entries.
-#   - q_media_dhash_pairs gained the n_blocks audit column (r11
-#     VERDICT #6: the bucket cap must not be silent) — a schema
-#     change, so its r11 certification is void and it re-certifies
-#     first.
-_REWIRED_R12: list[str] = ["q_media_dhash_pairs"]
-_pos_r11 = {n: i for i, n in enumerate(_ORDER_R11)}
-_PRIORITY = [
-    *_REWIRED_R12,
-    *sorted(
-        (n for n in _ORDER_R11 if n not in _REWIRED_R12),
-        key=lambda n: (LAST_CERT.get(n, 0), _pos_r11[n]),
-    ),
-]
-
-# r13 (r12 VERDICT #3 + "What's wrong #3"): the pre-emption rule is now
-# EXPLICIT.  A query whose builder or oracle CODE was touched this
-# round re-certifies first — its old certification no longer covers the
-# new plan — and PRE-EMPTS the tail of the ~50 window.  Every displaced
-# entry automatically LEADS the next window: the ledger keeps its (now
-# oldest) certification round and the tail sorts oldest-first, so
-# displacement costs one round at most and is self-correcting.  The
-# window is auditable in advance: `python tools/cert_ledger.py
-# --window` prints the predicted next-50 from the checked-in ledger +
-# this head.  The r13 window = the pre-empted entries below + the
-# r6-era remainder (q_ad_line, q_aroon, q_bucket_join, q_cmf, ...).
-#   - q_sql_tpch_q2: the Spark-side plan was rewritten from the
-#     double-expanded `supply` CTE + correlated scalar subquery to a
-#     single-pass window-min form (r12 VERDICT #2, the sf10 outlier);
-#     results are value-identical and the DuckDB oracle is unchanged,
-#     but the executed plan is new, so the r12 cert is void by the
-#     q_media_dhash_pairs precedent.
-#   - q_ewma_sql: the Spark-side plan was rewritten from the UnionLoop
-#     recursion to the bit-identical AGGREGATE-fold over running-window
-#     prefix arrays (r13 optimization round: 13.5 s -> ~1.0 s quiet at
-#     sf0.1); oracle unchanged (EWMA_RECURSIVE), executed plan new.
-#   - the five upsert-sink consumers below: sinks/parquet.upsert_ignore
-#     now clusters the append with an explicit (partition value,
-#     PK-hash bucket) repartition (r13 optimization round, guide §6
-#     small files: 736 -> 23 files, 5x faster write on the backfill
-#     seed; the first REBALANCE cut was reverted after AQE coalescing
-#     serialized the sf1 write); values unchanged, write path new.
-#   - the three stateful-operator streams below: their builders now pin
-#     the streaming state-partition count via stream_state_partitions
-#     (r13, guide §2.2: fixed per-partition state-store machinery
-#     dominated the single-batch replay — stream-stream join 2.5x);
-#     values are partition-routing-independent, executed plan new.
-_PREEMPT_R13: list[str] = [
-    "q_sql_tpch_q2",
-    "q_ewma_sql",
-    "q_backfill_job",
-    "q_backfill_incremental",
-    "q_upsert_ignore",
-    "q_stream_replay",
-    "q_stream_ingest",
-    "q_stream_join",
-    "q_stream_sessions",
-    "q_stream_candles",
-    # staging scan un-serialized (coalesce(1) -> repartition(slice)):
-    "q_stream_dedup",
-]
-_pos_r12 = {n: i for i, n in enumerate(_PRIORITY)}
-_PRIORITY = [
-    *_PREEMPT_R13,
-    *sorted(
-        (n for n in _pos_r12 if n not in _PREEMPT_R13),
-        key=lambda n: (LAST_CERT.get(n, 0), _pos_r12[n]),
-    ),
-]
-
-# r14 (second optimization round): builder code touched this round, so
-# the executed plans are new and the old certifications are void:
-#   - q_ewma_sql: fold multiplier (1.0D - 0.94D) -> 0.06D (ADVICE r13 —
-#     the double the recursion's decimal-folded constant actually is).
-#   - q_approx_stats: exact percentiles via sketch-guided bracket
-#     selection instead of the single-reducer `percentile` aggregate.
-#   - q_textrank / q_pagerank / q_hits / q_communities /
-#     q_communities_minhash: small-graph power iterations folded into
-#     single-row higher-order-function folds (loop kept above the gate).
-#   - q_dedup_clusters + its composition consumers q_dup_weights,
-#     q_corpus_pipeline, q_corpus_full: connected components as a lazy
-#     in-row fold below 100k edges; PLUS the shared exact-Jaccard
-#     verify tail now semi-join-prunes docs BEFORE tokenize (also
-#     covers q_dedup_minhash_ml, q_minhash_banded_verified).
-#   - q_kcore / q_kcore_minhash: the fixed-6-round peel as an exact
-#     in-row fold below the gate (alive-flag recurrence == the loop
-#     boolean-for-boolean; no convergence caveat).
-#   - q_stream_topk: state partitions pinned via
-#     stream_state_partitions (it is an applyInPandasWithState stream,
-#     misclassified with the foreachBatch set in r13).
-#   - q_tar_datasource / q_tar_writer: the tar DataSource reader now
-#     yields Arrow record batches instead of pickled rows.
-_PREEMPT_R14: list[str] = [
-    "q_ewma_sql",
-    "q_approx_stats",
-    "q_textrank",
-    "q_pagerank",
-    "q_hits",
-    "q_communities",
-    "q_communities_minhash",
-    "q_dedup_clusters",
-    "q_dup_weights",
-    "q_corpus_pipeline",
-    "q_corpus_full",
-    "q_dedup_minhash_ml",
-    "q_minhash_banded_verified",
-    "q_kcore",
-    "q_kcore_minhash",
-    "q_stream_topk",
-    "q_tar_datasource",
-    "q_tar_writer",
-]
-_pos_r13 = {n: i for i, n in enumerate(_PRIORITY)}
-_PRIORITY = [
-    *_PREEMPT_R14,
-    *sorted(
-        (n for n in _pos_r13 if n not in _PREEMPT_R14),
-        key=lambda n: (LAST_CERT.get(n, 0), _pos_r13[n]),
-    ),
-]
-
-assert len(_PRIORITY) == len(set(_PRIORITY)) and all(n in _ALL for n in _PRIORITY)
-
-QUERIES: dict[str, Builder] = {n: _ALL[n] for n in _PRIORITY}
-assert len(QUERIES) == len(_ALL)
+LAST_CERT = _last_cert(Path(__file__).resolve().parents[2])
+QUERIES: dict[str, Builder] = {
+    n: _ALL[n] for n in _rotation(list(_ALL), LAST_CERT, _TOUCHED)}
 
 __all__ = ["QUERIES", "ORACLES", "TIERS", "Builder"]
