@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import networkx as nx
+import pandas as pd
 import pytest
-from pyspark.errors.exceptions.captured import CapturedException
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from trading_etl_python_spark.operators import dedup as D
@@ -601,17 +604,10 @@ def test_cc_fold_matches_star_loop_exactly(spark):
     assert lab[39] == 39
 
 
-@pytest.mark.xfail(
-    strict=True,
-    raises=CapturedException,
-    reason="CC fold round count is not a bound on random-id chains",
-)
 def test_cc_fold_random_id_path(spark):
-    """One 64-node path with shuffled ids: min-label propagation with
-    one pointer jump per round needs far more than ceil(log2(2E+2))+4
-    rounds here, so the in-row fold's fixpoint check raises 'no fixpoint
-    within round bound'.  Correct labels put every node in the cluster
-    of the smallest id."""
+    """One 64-node path with shuffled ids, a shape on which min-label
+    propagation with one pointer jump per round needs far more than
+    log2(E) rounds: every node lands in the cluster of the smallest id."""
     import random
 
     ids = list(range(64))
@@ -620,3 +616,53 @@ def test_cc_fold_random_id_path(spark):
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     got = {r.doc_id: r.cluster_id for r in D.dedup_clusters(docs, pairs=pairs).collect()}
     assert got == {i: 0 for i in ids}
+
+
+@st.composite
+def cc_graphs(draw, max_nodes: int = 256):
+    """A random-id chain, a star or a random graph (self-loops and
+    repeated edges included) over up to ``max_nodes`` distinct ids."""
+    ids = draw(st.lists(st.integers(0, 10**9), min_size=2, max_size=max_nodes, unique=True))
+    shape = draw(st.sampled_from(["chain", "star", "random"]))
+    if shape == "chain":
+        return list(zip(ids, ids[1:]))
+    if shape == "star":
+        return [(ids[0], x) for x in ids[1:]]
+    ix = st.integers(0, len(ids) - 1)
+    return [(ids[a], ids[b]) for a, b in draw(st.lists(st.tuples(ix, ix), max_size=2 * len(ids)))]
+
+
+def _nx_min_labels(edges) -> dict[int, int]:
+    """Oracle: component-min label of every node on a non-loop edge."""
+    g = nx.Graph((a, b) for a, b in edges if a != b)
+    return {v: min(c) for c in nx.connected_components(g) for v in c}
+
+
+@given(cc_graphs())
+@settings(max_examples=300, deadline=None)
+def test_cc_kernel_matches_networkx(edges):
+    """The CC kernel body (node indexing + union-find), without Spark, on
+    the canonical edge set ``_cc_star_labels`` hands it."""
+    from trading_etl_python_spark.operators.graph import _kernel_frame
+
+    canon = sorted({(max(a, b), min(a, b)) for a, b in edges if a != b})
+    out = _kernel_frame(pd.DataFrame(canon, columns=["u", "w"]), "cc", {})
+    assert dict(zip(out["node"].tolist(), out["label"].tolist())) == _nx_min_labels(edges)
+
+
+@given(st.lists(cc_graphs(max_nodes=64), min_size=3, max_size=3))
+@settings(max_examples=3, deadline=None)
+def test_cc_both_paths_match_networkx(spark, graphs):
+    """dedup_clusters on both sides of the CC gate — max_iter=30 takes the
+    kernel, max_iter=29 the star loop — against networkx.  Three graphs
+    per example share one edge set on disjoint id ranges; ten extra docs
+    stay isolated singletons."""
+    edges = [(a + k * 10**10, b + k * 10**10) for k, g in enumerate(graphs) for a, b in g]
+    want = _nx_min_labels(edges)
+    ids = sorted({x for e in edges for x in e} | {-i for i in range(1, 11)})
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    for max_iter in (30, 29):
+        got = {r.doc_id: r.cluster_id
+               for r in D.dedup_clusters(docs, pairs=pairs, max_iter=max_iter).collect()}
+        assert got == {i: want.get(i, i) for i in ids}

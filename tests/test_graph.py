@@ -90,6 +90,8 @@ def test_fold_twins_match_loops_exactly(spark):
     propagation / textrank) must reproduce the distributed loops
     row-for-row — the fold is an execution-strategy change, never a
     semantic one.  Gates are monkeypatched to force each path."""
+    from pyspark.sql import functions as F
+
     import trading_etl_python_spark.operators.graph as G
     from trading_etl_python_spark.operators.text import textrank_keywords
 
@@ -105,6 +107,16 @@ def test_fold_twins_match_loops_exactly(spark):
          for i in range(6)],
         ["doc_id", "text"],
     )
+    # PageRank's loop sums doubles in shuffle order, so kernel == loop
+    # holds after ROUND(., 6) only if no unrounded score sits within the
+    # ~1e-16 reordering noise of a rounding boundary; make sure none is
+    # within 1e-9 of one
+    outw = edges.groupBy("src").agg(F.sum("w").alias("_ow"))
+    norm = edges.join(outw, "src").select(
+        "src", "dst", (F.col("w") / F.col("_ow")).alias("_frac")
+    )
+    raw = G._graph_kernel(norm, "pagerank", damping=0.85, iters=4, quantize=False)
+    assert all(abs((r.score * 1e6) % 1.0 - 0.5) > 1e-3 for r in raw.collect())
     cases = [
         lambda: G.pagerank(edges, iters=4),
         lambda: G.hits(edges, iters=3),
@@ -154,3 +166,29 @@ def test_kcore_fold_matches_peel_loop_exactly(spark):
     assert c[1] == c[2] == c[3] == 2          # triangle: 2-core
     assert c[10] == c[11] == c[12] == c[13] == 3  # 4-clique: 3-core
     assert c[20] == c[23] == 1 and c[30] == 1     # chain ends / pendant
+
+
+def test_graph_entry_points_on_empty_input(spark):
+    """An empty edge list takes the numpy kernel, which returns no rows:
+    every entry point gives an empty result with its usual columns, and
+    dedup_clusters labels every doc as its own singleton."""
+    import trading_etl_python_spark.operators.graph as G
+    from trading_etl_python_spark.operators.dedup import dedup_clusters
+    from trading_etl_python_spark.operators.text import textrank_keywords
+
+    edges = spark.createDataFrame([], "src long, dst long, w double")
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    cases = {
+        "pagerank": (G.pagerank(edges), ["node", "score"]),
+        "hits": (G.hits(edges), ["node", "authority", "hub"]),
+        "lpa": (G.label_propagation(pairs), ["node", "community"]),
+        "kcore": (G.kcore_layers(pairs), ["node", "coreness"]),
+        "textrank": (textrank_keywords(docs), ["node", "score"]),
+    }
+    for name, (df, cols) in cases.items():
+        assert df.columns == cols, name
+        assert df.collect() == [], name
+    ids = spark.createDataFrame([(i,) for i in (5, 1, 3)], "doc_id long")
+    got = sorted(map(tuple, dedup_clusters(ids, pairs=pairs).collect()))
+    assert got == [(1, 1, True), (3, 3, True), (5, 5, True)]

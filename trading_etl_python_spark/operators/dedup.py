@@ -643,76 +643,6 @@ def contamination(
     )
 
 
-def _cc_fold_labels(C: DataFrame, n_edges: int) -> DataFrame:
-    """Small-graph connected components as ONE in-row fold (r14, the
-    graph.py fold family): pack the (pre-counted, tiny) edge set into a
-    single row and iterate `label[i] <- min(label[i], label[label[i]],
-    min over neighbors j of label[j])` — min-label propagation plus one
-    pointer jump per round, for ceil(log2(2E+2))+4 rounds.  That count
-    is NOT a proven bound: the jump only doubles when ids grow along
-    the path (sorted-id chains); with shuffled ids the recurrence has
-    no log bound, and a 64-node path with random ids exhausts it.  The
-    final labels are re-checked against one more step IN-ROW and the
-    query raises (raise_error) if they are not a fixpoint — at a fixpoint
-    adjacent labels are equal (else the neighbor-min would change one)
-    while the component-minimum node keeps its own id (labels never go
-    below the component min), so fixpoint == component-min labels.
-
-    Labels iterate in dense-index space (indices assigned in node-id
-    order, so index-min == id-min) and map back to ids at the end.
-    Returns (v, l) for every node incident to an edge — the same
-    contract as the star loop."""
-    import math
-
-    from .graph import _indexed_one_row
-
-    e2 = C.select(F.col("u"), F.col("w").alias("v")).unionAll(
-        C.select(F.col("w").alias("u"), F.col("u").alias("v"))
-    )
-    nodes = e2.select(F.col("u").alias("node")).distinct()
-    one = _indexed_one_row(
-        e2.withColumn("_f", F.lit(1.0)), nodes, src="u", dst="v", frac="_f"
-    )
-
-    def el(lab, i):
-        return F.element_at(lab, i + F.lit(1))
-
-    def _step(lab):
-        # every node is symmetrized-incident, so _in is never null here
-        return F.transform(
-            F.col("g"),
-            lambda x: F.least(
-                el(lab, el(lab, x["_i"])),
-                F.array_min(F.transform(x["_in"], lambda e: el(lab, e["_j"]))),
-            ),
-        )
-
-    # heuristic round count, not a bound (see the docstring); a
-    # non-fixpoint raises below.  HOF evaluation is interpreted, so the
-    # expression is staged through PROJECTION boundaries below — the
-    # fold evaluates exactly once, the fixpoint re-check exactly once
-    # (CollapseProject keeps multiply-referenced non-cheap aliases
-    # apart).
-    rounds = math.ceil(math.log2(2 * n_edges + 2)) + 4
-    init = F.transform(F.col("g"), lambda x: x["_i"])
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(rounds)), init, lambda lab, _r: _step(lab)
-    )
-    one = one.select(F.col("g"), folded.alias("_lab"))
-    one = one.select(F.col("g"), F.col("_lab"), _step(F.col("_lab")).alias("_lab2"))
-    fixed = F.forall(
-        F.zip_with(F.col("_lab"), F.col("_lab2"), lambda a, b: a == b), lambda v: v
-    )
-    ids = F.col("g.node")
-    mapped = F.when(fixed, F.transform(F.col("_lab"), lambda i: el(ids, i))).otherwise(
-        F.raise_error(F.lit("_cc_fold_labels: no fixpoint within round bound"))
-    )
-    z = one.select(
-        F.explode(F.arrays_zip(ids.alias("v"), mapped.alias("_l"))).alias("z")
-    )
-    return z.select(F.col("z.v").alias("v"), F.col("z._l").alias("l"))
-
-
 def _cc_star_labels(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components via alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -733,19 +663,23 @@ def _cc_star_labels(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    # small-graph fast path (r14, the graph.py fold family): near-dup
-    # edge sets are orders of magnitude smaller than the corpus, and
-    # the star loop pays per-round eager-checkpoint jobs + checksum
-    # collects on that tiny set (measured sf0.1: 4 rounds + 2 checksums
-    # ~= 4.3 s of a 9 s query, on a 256-edge graph).  Below the bound
-    # the whole contraction runs as ONE lazy in-row fold that composes
-    # into the caller's final job; above it the star loop stands.
-    # (callers that TRUNCATE the contraction — max_iter below the
-    # default — keep the loop: the fold always reaches the fixpoint,
-    # which is a different contract than best-effort-within-k-rounds)
+    # small graphs (r14): near-dup edge sets are orders of magnitude
+    # smaller than the corpus, and the star loop pays per-round
+    # eager-checkpoint jobs + checksum collects on that tiny set
+    # (measured sf0.1: 4 rounds + 2 checksums ~= 4.3 s of a 9 s query, on
+    # a 256-edge graph).  Below the bound the whole contraction is one
+    # union-find in the graph.py numpy kernel, which reaches the
+    # component-min labels on every input; above it the star loop
+    # stands.  Callers that TRUNCATE the contraction (max_iter below the
+    # default) keep the loop: the kernel always finishes, which is a
+    # different contract than best-effort-within-k-rounds.
     n_edges = C.count()
     if n_edges <= 100_000 and max_iter >= 30:
-        return _cc_fold_labels(C, n_edges)
+        from .graph import _graph_kernel
+
+        return _graph_kernel(C, "cc").select(
+            F.col("node").alias("v"), F.col("label").alias("l")
+        )
 
     def checksum(c: DataFrame):
         # bit_xor, not sum: ANSI mode raises on long-sum overflow

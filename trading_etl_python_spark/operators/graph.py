@@ -1,8 +1,11 @@
-"""Iterative graph algorithms as DataFrame loops.
+"""Iterative graph algorithms: distributed DataFrame loops, plus one
+single-task numpy kernel for small graphs.
 
 Connected components (large-star/small-star) lives in
 ``operators/dedup.py`` next to its near-dup consumer; this module holds
-the general-purpose iterative kernels, starting with weighted PageRank.
+the general-purpose iterative algorithms (PageRank, HITS, label
+propagation, k-core) and the small-graph kernel they, CC and TextRank
+share.
 
 Scale design: each PageRank iteration is one join (edges x ranks, keyed
 on the source node) + one groupBy(dst) — the canonical shuffle pair every
@@ -15,6 +18,13 @@ scalar is the node COUNT (one long).  Dangling-node mass (out-degree-0
 nodes) is redistributed uniformly each iteration via a 1-row broadcast —
 the standard stochastic-matrix fix, kept in-plan.
 
+Small graphs skip the loop: ``_graph_kernel`` ships the edge list to ONE
+``applyInPandas`` group, indexes the nodes once (``np.unique`` over the
+endpoints, i.e. node order) and runs the whole iteration in numpy.  Each
+algorithm's kernel reproduces its loop's arithmetic exactly: integer
+counts and 1e-12-quantized int64 sums are order-free, and the one plain
+double sum (PageRank's) runs sequentially in a fixed order.
+
 Numeric parity with the SQL oracle: all arithmetic in IEEE doubles with
 identical literals; per-iteration sums differ only in accumulation order
 (~1e-16), damping < 1 keeps the drift contractive, and the final
@@ -23,139 +33,170 @@ identical literals; per-iteration sums differ only in accumulation order
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Small-graph fold gate (r14, the q_ewma_sql lesson generalized): when
-# the graph that survives edge aggregation is provably small, the
-# iterative DataFrame loop is pure per-level orchestration — each
-# iteration pays fixed driver/job/stage latency on microscopic state
-# (measured r14: q_textrank 89 stages / 2.0 s task time for 4.4 s wall,
-# q_pagerank 123 stages, q_hits 259 stages — the exact cost class the
-# r13 ewma fold removed).  Below these bounds the whole power iteration
-# runs as ONE higher-order-function fold over a single packed row
-# (state O(V+E), per-iteration work O(V+E) via phase-threaded
-# accumulators, never nested-recompute); above them the distributed
-# loop is the right shape and stands unchanged.  Bounds sized so the
-# packed row stays well under Spark's single-row comfort zone
-# (~24 B/edge x 2 directions + ~32 B/node ≈ 50 MB at the cap).
+# Small-graph gate: below these bounds the iterative DataFrame loop is
+# pure per-level orchestration — each iteration pays fixed driver/job/
+# stage latency on microscopic state (measured r14: q_textrank 89 stages
+# / 2.0 s task time for 4.4 s wall, q_pagerank 123 stages, q_hits 259
+# stages) — so the whole iteration runs in ``_graph_kernel``: one Python
+# task, O(V+E) numpy work per iteration.  Above them the distributed loop
+# is the right shape and stands unchanged.  The values are the ones the
+# earlier packed-row folds were sized with; re-sizing them from a
+# measured kernel-vs-loop crossover is ROADMAP item 1 step 2, still open.
 _FOLD_MAX_NODES = 65_536
 _FOLD_MAX_EDGES = 1_000_000
 
 
-def _indexed_one_row(
-    norm: DataFrame,
-    nodes: DataFrame,
-    src: str,
-    dst: str,
-    frac: str,
-    out_lists: bool = False,
-) -> DataFrame:
-    """Pack a (small, pre-counted) weighted digraph into ONE row:
-    ``g`` = array over dense node index of
-    ``struct(_i, node, _in[, _out])`` where ``_in``/``_out`` are the
-    node's inbound/outbound edge lists as ``struct(_j, _f)`` (neighbor
-    index, weight), each list sorted by neighbor index so every fold
-    accumulates in a deterministic order.  Nodes without edges in a
-    direction carry NULL lists (the fold treats them as empty — the
-    same semantics as the loop's left-join + coalesce)."""
-    from pyspark.sql import Window
-
-    nid = nodes.select("node").withColumn(
-        "_i", (F.row_number().over(Window.orderBy("node")) - F.lit(1)).cast("int")
-    )
-    e = (
-        norm.join(
-            nid.select(F.col("node").alias("_sn"), F.col("_i").alias("_si")),
-            F.col(src) == F.col("_sn"),
-        )
-        .join(
-            nid.select(F.col("node").alias("_dn"), F.col("_i").alias("_di")),
-            F.col(dst) == F.col("_dn"),
-        )
-        .select("_si", "_di", F.col(frac).alias("_f"))
-    )
-    inb = e.groupBy("_di").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("_si").alias("_j"), F.col("_f")))
-        ).alias("_in")
-    )
-    g = nid.join(inb, nid["_i"] == inb["_di"], "left").select("_i", "node", "_in")
-    if out_lists:
-        outb = e.groupBy("_si").agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_di").alias("_j"), F.col("_f")))
-            ).alias("_out")
-        )
-        g = g.join(outb, g["_i"] == outb["_si"], "left").select(
-            "_i", "node", "_in", "_out"
-        )
-    return g.agg(
-        F.sort_array(F.collect_list(F.struct(*[F.col(c) for c in g.columns]))).alias(
-            "g"
-        )
-    )
+def _half_up(x: np.ndarray) -> np.ndarray:
+    """Spark ``ROUND(x, 0)`` as int64: HALF_UP on the exact double.  The
+    fraction ``a - floor(a)`` is exact, so unlike ``floor(a + 0.5)`` this
+    also holds at the largest double below 0.5."""
+    a = np.abs(x)
+    r = np.floor(a)
+    return np.copysign(r + (a - r >= 0.5), x).astype(np.int64)
 
 
-def _explode_scores(one: DataFrame, scores, out_col: str) -> DataFrame:
-    """(packed row, scores array) -> (node, ROUND(score, 6)) rows."""
-    z = one.select(
-        F.explode(
-            F.arrays_zip(F.col("g.node").alias("node"), scores.alias("_s"))
-        ).alias("z")
+def _qsum(idx: np.ndarray, x: np.ndarray, n: int) -> np.ndarray:
+    """Per-node int64 sum of ``ROUND(x * 1e12, 0)`` — exact in any order."""
+    q = np.zeros(n, np.int64)
+    np.add.at(q, idx, _half_up(x * 1e12))
+    return q
+
+
+def _pagerank_np(s, d, w, n, damping, iters, quantize):
+    """``pagerank``'s loop (``quantize=False``) or ``textrank_keywords``'
+    (``quantize=True``: contributions summed as 1e-12 units; its graph
+    has no dangling node).  Double sums run sequentially (``np.add.at``,
+    ``np.add.accumulate``) in (dst, src, weight) order and, for the
+    dangling mass, node order."""
+    o = np.lexsort((w, s, d))
+    s, d, w = s[o], d[o], w[o]
+    dangling = np.bincount(s, minlength=n) == 0
+    sc = np.full(n, 1.0 / n)
+    base = (1.0 - damping) / n
+    for _ in range(iters):
+        dm = np.add.accumulate(sc[dangling])[-1] if dangling.any() else 0.0
+        if quantize:
+            c = _qsum(d, w * sc[s], n) / 1e12
+        else:
+            c = np.zeros(n)
+            np.add.at(c, d, w * sc[s])
+        sc = base + damping * (c + dm / n)
+    return {"score": sc}
+
+
+def _hits_np(s, d, w, n, iters):
+    """``hits``' loop: weights normalize once against their int64 total,
+    contributions quantize to 1e-12 units, each L1 norm is the exact
+    int64 total."""
+    f = w.astype(np.float64) / float(w.sum())
+    h = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        aq = _qsum(d, f * h[s], n)
+        a = aq / float(aq.sum())
+        hq = _qsum(s, f * a[d], n)
+        h = hq / float(hq.sum())
+    return {"authority": a, "hub": h}
+
+
+def _lpa_np(s, d, w, n, iters):
+    """``label_propagation``'s loop: each node takes the most frequent
+    label among its neighbours, the smallest label on ties (labels are
+    node indices, whose order is node order)."""
+    u, v = np.concatenate([s, d]), np.concatenate([d, s])
+    lab = np.arange(n)
+    for _ in range(iters):
+        key, cnt = np.unique(v * n + lab[u], return_counts=True)
+        node, best = key // n, key % n
+        o = np.lexsort((best, -cnt, node))
+        o = o[np.r_[True, node[o][1:] != node[o][:-1]]]
+        lab[node[o]] = best[o]
+    return {"community": lab}
+
+
+def _kcore_np(s, d, w, n, rounds):
+    """``kcore_layers``' loop: exactly ``rounds`` synchronous peels per k;
+    a node is in the k-core if it survives with a surviving neighbour."""
+    u, v = np.concatenate([s, d]), np.concatenate([d, s])
+
+    def member(k):
+        alive = np.ones(n, bool)
+        for _ in range(rounds):
+            alive = np.bincount(v[alive[u] & alive[v]], minlength=n) >= k
+        return np.bincount(v[alive[u] & alive[v]], minlength=n) > 0
+
+    return {"coreness": 1 + member(2).astype(np.int64) + member(3)}
+
+
+def _cc_np(s, d, w, n):
+    """Connected components by union-find with the smallest node index
+    as root (path halving): the component-min label for every node, on
+    any input, with no round bound."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in zip(s.tolist(), d.tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {"label": np.array([find(x) for x in range(n)], np.int64)}
+
+
+# algorithm -> (numpy kernel, result columns after ``node``); a ``{node}``
+# column holds node indices and leaves the kernel as node values
+_KERNELS = {
+    "pagerank": (_pagerank_np, "score double"),
+    "hits": (_hits_np, "authority double, hub double"),
+    "lpa": (_lpa_np, "community {node}"),
+    "kcore": (_kcore_np, "coreness bigint"),
+    "cc": (_cc_np, "label {node}"),
+}
+
+
+def _kernel_frame(pdf: pd.DataFrame, algo: str, params: dict) -> pd.DataFrame:
+    """The kernel body on one pandas frame of (src, dst[, weight]) rows:
+    index the endpoints in node order, run ``algo``, map back to nodes."""
+    fn, cols = _KERNELS[algo]
+    m = len(pdf)
+    nodes, idx = np.unique(
+        np.concatenate([pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()]),
+        return_inverse=True,
     )
-    return z.select(
-        F.col("z.node").alias("node"), F.round("z._s", 6).alias(out_col)
+    w = pdf.iloc[:, 2].to_numpy() if pdf.shape[1] > 2 else None
+    out = fn(idx[:m], idx[m:], w, len(nodes), **params)
+    if "{node}" in cols:
+        out = {c: nodes[v] for c, v in out.items()}
+    return pd.DataFrame({"node": nodes, **out})
+
+
+# the kernel ships to the Python worker by value: the worker needs numpy
+# and pandas, not this package on its path
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _graph_kernel(edges: DataFrame, algo: str, **params) -> DataFrame:
+    """Run one small-graph algorithm in a single Python task.  ``edges``
+    holds (src, dst[, weight]) as its columns, in that order; the node
+    set is every endpoint.  Returns (node, <algorithm columns>), one row
+    per node, unrounded; an empty edge list returns no rows."""
+    s, d = edges.columns[:2]
+    node_t = edges.select(s).unionAll(edges.select(d)).schema[0].dataType.simpleString()
+    schema = f"node {node_t}, " + _KERNELS[algo][1].format(node=node_t)
+    # one constant group (a string: an integer literal reads as ordinal)
+    return edges.groupBy(F.lit("g")).applyInPandas(
+        lambda pdf: _kernel_frame(pdf, algo, params), schema
     )
-
-
-def _pagerank_fold(
-    norm: DataFrame, nodes: DataFrame, n: int, damping: float, iters: int,
-    src: str, dst: str,
-) -> DataFrame:
-    """The small-graph fold twin of ``pagerank``'s loop: identical
-    double literals and per-node operations, accumulation order fixed
-    (edge lists sorted by source index) where the loop's shuffle order
-    was arbitrary — the same <=1e-16 class of float-sum reordering the
-    loop already tolerates under the final 6-decimal rounding (module
-    docstring).  Two fold phases per iteration so the dangling-mass
-    scalar is computed ONCE per iteration (state-threaded), keeping the
-    per-iteration cost O(V+E) instead of O(V^2)."""
-    one = _indexed_one_row(norm, nodes, src=src, dst=dst, frac="_frac", out_lists=True)
-    init = F.struct(
-        F.array_repeat(F.lit(1.0 / n), n).alias("sc"), F.lit(0.0).alias("dm")
-    )
-    base = F.lit((1 - damping) / n)
-
-    def _step(st, i):
-        # phase 1 (odd i): dangling mass of the CURRENT scores — the
-        # loop's `ranks ⋈ dang |> sum(score)` as an O(V) array scan
-        dm = F.aggregate(
-            F.col("g"),
-            F.lit(0.0),
-            lambda a, x: a
-            + F.when(
-                x["_out"].isNull(), F.element_at(st["sc"], x["_i"] + F.lit(1))
-            ).otherwise(F.lit(0.0)),
-        )
-        # phase 2 (even i): the rank update itself
-        def node_score(x):
-            c = F.aggregate(
-                x["_in"],
-                F.lit(0.0),
-                lambda acc, e: acc + e["_f"] * F.element_at(st["sc"], e["_j"] + F.lit(1)),
-            )
-            c = F.when(x["_in"].isNull(), F.lit(0.0)).otherwise(c)
-            return base + F.lit(damping) * (c + st["dm"] / F.lit(n))
-        return F.when(
-            i % F.lit(2) == F.lit(1),
-            F.struct(st["sc"].alias("sc"), dm.alias("dm")),
-        ).otherwise(
-            F.struct(F.transform(F.col("g"), node_score).alias("sc"), st["dm"].alias("dm"))
-        )
-
-    folded = F.aggregate(F.sequence(F.lit(1), F.lit(2 * iters)), init, _step)
-    return _explode_scores(one, folded["sc"], "score")
 
 
 def pagerank(
@@ -187,13 +228,13 @@ def pagerank(
         .distinct()
     )
     n = nodes.count()
-    # small-graph fast path (r14): the whole power iteration as ONE
-    # fold over a packed row — see _FOLD_MAX_NODES.  Counts are cheap
-    # here (both sides derive from the checkpointed edge table).
+    # small graphs run in the numpy kernel — see _FOLD_MAX_NODES.  Counts
+    # are cheap here (both sides derive from the checkpointed edge table).
     if n <= _FOLD_MAX_NODES:
         norm = norm.localCheckpoint(eager=False)
         if norm.count() <= _FOLD_MAX_EDGES:
-            return _pagerank_fold(norm, nodes, n, damping, iters, src, dst)
+            pr = _graph_kernel(norm, "pagerank", damping=damping, iters=iters, quantize=False)
+            return pr.select("node", F.round("score", 6).alias("score"))
     # parallelism tracks the GRAPH size, not the (often much larger)
     # edge-construction input: below the threshold the per-iteration
     # state is driver-page-sized and 32-task stages are pure scheduler
@@ -311,60 +352,6 @@ def triangle_counts(
     return counted.unionAll(audited)
 
 
-def _lpa_fold(edges: DataFrame, nodes: DataFrame, iters: int) -> DataFrame:
-    """Small-graph fold twin of ``label_propagation``'s loop — exact by
-    construction: per node the new label is the mode of its neighbors'
-    labels with smallest-label tie-break, computed here by sorting the
-    neighbor labels and scanning runs (ascending order makes "strictly
-    greater count replaces" pick the smallest label among maxima —
-    the same total order as the loop's ``ORDER BY count DESC, label``
-    row_number).  Integer counts, no floats: fold == loop exactly."""
-    one = _indexed_one_row(
-        edges.withColumn("_f", F.lit(1.0)), nodes, src="u", dst="v", frac="_f"
-    )
-    init = F.col("g.node")  # every node starts as its own community
-
-    def _mode(x, lab):
-        nl = F.array_sort(
-            F.transform(x["_in"], lambda e: F.element_at(lab, e["_j"] + F.lit(1)))
-        )
-        z = F.struct(
-            F.element_at(nl, 1).alias("best"),
-            F.lit(0).cast("long").alias("bc"),
-            F.element_at(nl, 1).alias("cur"),
-            F.lit(0).cast("long").alias("cc"),
-        )
-
-        def scan(s, l):
-            cc = F.when(l == s["cur"], s["cc"] + F.lit(1)).otherwise(
-                F.lit(1).cast("long")
-            )
-            return F.struct(
-                F.when(cc > s["bc"], l).otherwise(s["best"]).alias("best"),
-                F.when(cc > s["bc"], cc).otherwise(s["bc"]).alias("bc"),
-                l.alias("cur"),
-                cc.alias("cc"),
-            )
-
-        return F.aggregate(nl, z, scan, lambda s: s["best"])
-
-    def _step(lab, i):
-        return F.transform(
-            F.col("g"),
-            lambda x: F.when(
-                x["_in"].isNull(), F.element_at(lab, x["_i"] + F.lit(1))
-            ).otherwise(_mode(x, lab)),
-        )
-
-    folded = F.aggregate(F.sequence(F.lit(1), F.lit(iters)), init, _step)
-    z = one.select(
-        F.explode(
-            F.arrays_zip(F.col("g.node").alias("node"), folded.alias("_l"))
-        ).alias("z")
-    )
-    return z.select(F.col("z.node").alias("node"), F.col("z._l").alias("community"))
-
-
 def label_propagation(
     pairs: DataFrame, iters: int = 5, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
@@ -394,12 +381,12 @@ def label_propagation(
     edges = p.unionAll(
         p.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
-    # small-graph fast path (r14): the whole propagation as ONE fold —
-    # exact (integer counts, deterministic tie-break), see _FOLD_MAX_NODES
+    # small graphs run in the numpy kernel (integer counts, same
+    # tie-break: exact) — see _FOLD_MAX_NODES
     if 2 * n_pairs <= _FOLD_MAX_EDGES:
         nodes = edges.select(F.col("u").alias("node")).distinct()
         if nodes.count() <= _FOLD_MAX_NODES:
-            return _lpa_fold(edges, nodes, iters)
+            return _graph_kernel(p, "lpa", iters=iters)
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -420,74 +407,6 @@ def label_propagation(
         if it % 2 == 1 and it != iters - 1:
             labels = labels.localCheckpoint(eager=False)
     return labels.select("node", F.col("label").alias("community"))
-
-
-def _hits_fold(frac: DataFrame, nodes: DataFrame, n: int, iters: int) -> DataFrame:
-    """Small-graph fold twin of ``hits``'s loop — exact by construction:
-    every contribution quantizes to integer 1e-12 units before the
-    sums (order-irrelevant long arithmetic), and the L1 totals are the
-    same long sums (nodes without edges contribute literal 0).  Six
-    fold phases per iteration thread the intermediates (quantized
-    sums, totals) through the accumulator so each phase is O(V+E) —
-    no nested recompute."""
-    one = _indexed_one_row(frac, nodes, src="s", dst="d", frac="frac", out_lists=True)
-    zl = F.lit(0).cast("long")
-
-    def _qsum(lst, vec):
-        s = F.aggregate(
-            lst,
-            zl,
-            lambda acc, e: acc
-            + F.round(
-                e["_f"] * F.element_at(vec, e["_j"] + F.lit(1)) * F.lit(1e12), 0
-            ).cast("long"),
-        )
-        return F.when(lst.isNull(), zl).otherwise(s)
-
-    init = F.struct(
-        F.array_repeat(F.lit(0.0), n).alias("a"),
-        F.array_repeat(F.lit(1.0) / F.lit(float(n)), n).alias("h"),
-        F.array_repeat(zl, n).alias("q"),
-        zl.alias("t"),
-    )
-
-    def _step(st, i):
-        ph = (i - F.lit(1)) % F.lit(6)
-        tot = F.aggregate(st["q"], zl, lambda p, x: p + x)
-        ratio = F.transform(st["q"], lambda x: x.cast("double") / st["t"].cast("double"))
-
-        def keep(**over):
-            fields = {"a": st["a"], "h": st["h"], "q": st["q"], "t": st["t"], **over}
-            return F.struct(*[fields[k].alias(k) for k in ("a", "h", "q", "t")])
-
-        return (
-            F.when(ph == F.lit(0), keep(q=F.transform(F.col("g"), lambda x: _qsum(x["_in"], st["h"]))))
-            .when(ph == F.lit(1), keep(t=tot))
-            .when(ph == F.lit(2), keep(a=ratio))
-            .when(ph == F.lit(3), keep(q=F.transform(F.col("g"), lambda x: _qsum(x["_out"], st["a"]))))
-            .when(ph == F.lit(4), keep(t=tot))
-            .otherwise(keep(h=ratio))
-        )
-
-    folded = F.aggregate(F.sequence(F.lit(1), F.lit(6 * iters)), init, _step)
-    # stage the fold behind a projection boundary so the interpreted
-    # HOF evaluates ONCE (the _cc_fold_labels lesson): referencing
-    # folded["a"]/folded["h"] directly would inline two copies
-    one = one.select(F.col("g"), folded.alias("_st"))
-    z = one.select(
-        F.explode(
-            F.arrays_zip(
-                F.col("g.node").alias("node"),
-                F.col("_st.a").alias("_a"),
-                F.col("_st.h").alias("_h"),
-            )
-        ).alias("z")
-    )
-    return z.select(
-        F.col("z.node").alias("node"),
-        F.round("z._a", 6).alias("authority"),
-        F.round("z._h", 6).alias("hub"),
-    )
 
 
 def hits(
@@ -512,10 +431,6 @@ def hits(
     e = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d"), F.col(weight).cast("long").alias("wl")
     ).localCheckpoint()
-    total = e.agg(F.sum("wl")).collect()[0][0]
-    frac = e.select(
-        "s", "d", (F.col("wl").cast("double") / F.lit(float(total))).alias("frac")
-    ).localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("d").alias("node")))
@@ -523,10 +438,18 @@ def hits(
         .localCheckpoint()
     )
     n = nodes.count()
-    # small-graph fast path (r14): one fold instead of 5 x 4 jobs —
-    # exact (quantized-integer contributions), see _FOLD_MAX_NODES
+    # small graphs run in the numpy kernel instead of 5 x 4 jobs — exact
+    # (quantized-integer contributions), see _FOLD_MAX_NODES
     if n <= _FOLD_MAX_NODES and e.count() <= _FOLD_MAX_EDGES:
-        return _hits_fold(frac, nodes, n, iters)
+        return _graph_kernel(e, "hits", iters=iters).select(
+            "node",
+            F.round("authority", 6).alias("authority"),
+            F.round("hub", 6).alias("hub"),
+        )
+    total = e.agg(F.sum("wl")).collect()[0][0]
+    frac = e.select(
+        "s", "d", (F.col("wl").cast("double") / F.lit(float(total))).alias("frac")
+    ).localCheckpoint(eager=False)
     hub = nodes.withColumn("h", F.lit(1.0) / F.lit(float(n)))
     auth = None
     for _ in range(iters):
@@ -604,70 +527,16 @@ def kcore_layers(
     # unionAll(pairs, pairs) would inline the (typically expensive)
     # build twice into one plan and double its cost
     p0 = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint()
-    # small-graph fast path (r14, the fold family): the peel loop is
-    # 2 k-values x `rounds` x (degree agg + 2 joins + every-2nd-round
-    # eager checkpoint) on a tiny edge set.  The contract is EXACTLY
-    # `rounds` synchronous peels (fixed, not converge-until), and the
-    # per-round state is one alive-flag per node with the integer
-    # recurrence K_r(x) = (# incident edges with both endpoints alive
-    # under K_{r-1}) >= k — so the in-row fold below is exactly the
-    # loop, boolean-for-boolean, with no round-bound caveat at all.
+    # small graphs run in the numpy kernel: the peel loop is 2 k-values
+    # x `rounds` x (degree agg + 2 joins + every-2nd-round eager
+    # checkpoint) on a tiny edge set, and the kernel peels exactly
+    # `rounds` times per k — boolean-for-boolean the loop
     n_pairs = p0.count()
     if 2 * n_pairs <= _FOLD_MAX_EDGES:
         e2 = p0.unionAll(p0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         nodes = e2.select(F.col("u").alias("node")).distinct()
         if nodes.count() <= _FOLD_MAX_NODES:
-            one = _indexed_one_row(
-                e2.withColumn("_f", F.lit(1.0)), nodes, src="u", dst="v", frac="_f"
-            )
-
-            def core_flags(k: int):
-                init = F.transform(F.col("g"), lambda x: F.lit(True))
-
-                def step(fl, _r):
-                    return F.transform(
-                        F.col("g"),
-                        lambda x: F.aggregate(
-                            x["_in"],
-                            F.lit(0),
-                            lambda c, e: c
-                            + F.when(
-                                F.element_at(fl, x["_i"] + F.lit(1))
-                                & F.element_at(fl, e["_j"] + F.lit(1)),
-                                F.lit(1),
-                            ).otherwise(F.lit(0)),
-                        )
-                        >= F.lit(k),
-                    )
-
-                return F.aggregate(F.sequence(F.lit(1), F.lit(rounds)), init, step)
-
-            one = one.select(
-                F.col("g"), core_flags(2).alias("_k2"), core_flags(3).alias("_k3")
-            )
-
-            def member(flags_col, x):
-                return F.element_at(flags_col, x["_i"] + F.lit(1)) & F.exists(
-                    x["_in"],
-                    lambda e: F.element_at(flags_col, e["_j"] + F.lit(1)),
-                )
-
-            corn = F.transform(
-                F.col("g"),
-                lambda x: (
-                    F.lit(1)
-                    + member(F.col("_k2"), x).cast("int")
-                    + member(F.col("_k3"), x).cast("int")
-                ).cast("long"),
-            )
-            z = one.select(
-                F.explode(
-                    F.arrays_zip(F.col("g.node").alias("node"), corn.alias("_c"))
-                ).alias("z")
-            )
-            return z.select(
-                F.col("z.node").alias("node"), F.col("z._c").alias("coreness")
-            )
+            return _graph_kernel(p0, "kcore", rounds=rounds)
     # parallelism tracks the GRAPH size (the pagerank rule): the peel
     # loop is 2 x rounds x (degree agg + 2 joins) — on a small edge set
     # 32-task stages are pure scheduler overhead

@@ -1453,40 +1453,19 @@ def textrank_keywords(
     ).localCheckpoint(eager=False)
     nodes = edges.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=False)
     n_nodes = nodes.count()
-    # small-graph fast path (r14, the q_ewma_sql lesson): on a closed
-    # vocabulary the co-occurrence graph is vocabulary-sized — the
-    # 8-iteration DataFrame loop was pure per-level orchestration
-    # (measured: 89 stages / 2.0 s task time for a 4.4 s wall at
-    # sf0.1).  Below the graph.py bounds the whole power iteration
-    # runs as ONE fold over a packed row; the quantized integer
-    # contribution sums make fold == loop EXACT in any order.  An
-    # open-vocabulary corpus above the bounds takes the loop unchanged.
-    from .graph import _FOLD_MAX_EDGES, _FOLD_MAX_NODES, _explode_scores, _indexed_one_row
+    # small graphs (r14, the q_ewma_sql lesson): on a closed vocabulary
+    # the co-occurrence graph is vocabulary-sized — the 8-iteration
+    # DataFrame loop was pure per-level orchestration (measured: 89
+    # stages / 2.0 s task time for a 4.4 s wall at sf0.1).  Below the
+    # graph.py bounds the whole power iteration runs in the numpy kernel;
+    # the quantized integer contribution sums make kernel == loop EXACT
+    # in any order.  An open-vocabulary corpus above the bounds takes the
+    # loop unchanged.
+    from .graph import _FOLD_MAX_EDGES, _FOLD_MAX_NODES, _graph_kernel
 
     if n_nodes <= _FOLD_MAX_NODES and norm.count() <= _FOLD_MAX_EDGES:
-        one = _indexed_one_row(norm, nodes, src="src", dst="dst", frac="frac")
-        init = F.array_repeat(F.lit(1.0) / F.lit(float(n_nodes)), n_nodes)
-        base = F.lit((1.0 - d)) / F.lit(float(n_nodes))
-        zl = F.lit(0).cast("long")
-
-        def _step(sc, _i):
-            def node_score(x):
-                cq = F.aggregate(
-                    x["_in"],
-                    zl,
-                    lambda acc, e: acc
-                    + F.round(
-                        e["_f"] * F.element_at(sc, e["_j"] + F.lit(1)) * F.lit(1e12),
-                        0,
-                    ).cast("long"),
-                )
-                cq = F.when(x["_in"].isNull(), zl).otherwise(cq)
-                return base + F.lit(d) * (cq.cast("double") / F.lit(1e12))
-
-            return F.transform(F.col("g"), node_score)
-
-        scores = F.aggregate(F.sequence(F.lit(1), F.lit(iters)), init, _step)
-        return _explode_scores(one, scores, "score")
+        pr = _graph_kernel(norm, "pagerank", damping=d, iters=iters, quantize=True)
+        return pr.select("node", F.round("score", 6).alias("score"))
     pr = nodes.withColumn("score", F.lit(1.0) / F.lit(float(n_nodes)))
     for i in range(iters):
         contrib = (
