@@ -132,3 +132,132 @@ def test_incremental_backfill_bounded_context_plan(spark, sf_dir, tmp_path):
     assert "LeftSemi" in plan and "Broadcast" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # the semi join must broadcast
+
+
+# -- the API reads' per-table snapshot (jobs._snapshot) ----------------------
+
+_TICKS = "time timestamp_ntz, symbol long, close double"
+
+
+def _ts(day: int, sec: int = 0):
+    import datetime as dt
+
+    return dt.datetime(2024, 1, day, 0, 0, sec)
+
+
+def _append(spark, path, rows):
+    from trading_etl_python_spark.sinks import upsert_ignore
+
+    return upsert_ignore(spark.createDataFrame(rows, _TICKS), path)
+
+
+def _fresh_latest(spark, path):
+    from trading_etl_python_spark.operators.windows import latest_per_key
+
+    return latest_per_key(spark.read.parquet(path), order_cols=("time",)).drop("trade_date")
+
+
+def _jobs_fired(spark, group, fn):
+    """(fn(), ids of the Spark jobs it fired), counted through a job group
+    once the listener bus has delivered every job start."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _reads(spark, path):
+    """(latest rows by symbol, range rows over the whole of January)."""
+    latest = sorted(latest_indicators_job(spark, path).collect())
+    sliced = sorted(range_query_job(spark, path, "2024-01-01", "2024-01-31").collect())
+    return latest, sliced
+
+
+def test_repeated_latest_read_matches_fresh_plan_and_runs_no_job(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), 1, 10.0), (_ts(3), 1, 11.0), (_ts(2), 2, 20.0)])
+    latest_indicators_job(spark, path)  # computes the snapshot's rows
+    got, jobs = _jobs_fired(spark, "snapshot-latest", lambda: latest_indicators_job(spark, path))
+    rows, collect_jobs = _jobs_fired(spark, "snapshot-latest-collect", got.collect)
+    assert jobs == [] and collect_jobs == []
+    want = _fresh_latest(spark, path)
+    assert got.schema == want.schema
+    assert sorted(rows) == sorted(want.collect())
+    assert [(r.symbol, r.close) for r in sorted(rows)] == [(1, 11.0), (2, 20.0)]
+
+
+def test_snapshot_reads_see_an_appended_trade_date(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), 1, 10.0), (_ts(2), 2, 20.0)])
+    before_latest, before_range = _reads(spark, path)
+    assert _append(spark, path, [(_ts(5), 2, 21.0)]) == 1
+    latest, sliced = _reads(spark, path)
+    assert [(r.symbol, r.close) for r in latest] == [(1, 10.0), (2, 21.0)]
+    assert len(sliced) == len(before_range) + 1
+    assert sorted(latest) == sorted(_fresh_latest(spark, path).collect()) != before_latest
+
+
+def test_snapshot_reads_see_an_external_overwrite(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), 1, 10.0), (_ts(3), 2, 20.0), (_ts(4), 3, 30.0)])
+    _reads(spark, path)
+    spark.createDataFrame([(_ts(6), 9, 90.0)], _TICKS).withColumn(
+        "trade_date", F.to_date("time")
+    ).write.mode("overwrite").partitionBy("trade_date").parquet(path)
+    latest, sliced = _reads(spark, path)
+    assert [(r.symbol, r.close) for r in latest] == [(9, 90.0)]
+    assert [(r.symbol, r.close) for r in sliced] == [(9, 90.0)]
+
+
+def test_rewriting_success_marker_keeps_the_snapshot(spark, tmp_path):
+    from trading_etl_python_spark.jobs import _snapshot
+
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), 1, 10.0)])
+    latest_indicators_job(spark, path)
+    snap = _snapshot(spark, path)
+    (tmp_path / "tbl" / "_SUCCESS").write_text("rewritten by a later job")
+    assert _snapshot(spark, path) is snap
+    _, jobs = _jobs_fired(spark, "snapshot-success", lambda: latest_indicators_job(spark, path).collect())
+    assert jobs == []
+
+
+def test_concurrent_latest_reads_share_one_snapshot(spark, tmp_path):
+    """More reading threads than cores, with a short switch interval: every
+    read returns the table's rows, and afterwards the snapshot serves a
+    read without a Spark job."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), s, float(s)) for s in range(6)])
+    want = sorted(_fresh_latest(spark, path).collect())
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(lambda: sorted(latest_indicators_job(spark, path).collect())) for _ in range(16)]
+            got = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [want] * 16
+    _, jobs = _jobs_fired(spark, "snapshot-after-threads", lambda: latest_indicators_job(spark, path).collect())
+    assert jobs == []
+
+
+def test_non_local_directory_path_reads_uncached(spark, tmp_path):
+    from trading_etl_python_spark.jobs import _SNAPSHOTS, _snapshot
+
+    path = str(tmp_path / "tbl")
+    _append(spark, path, [(_ts(2), 1, 10.0), (_ts(3), 1, 11.0)])
+    uri = f"file://{path}"
+    assert _snapshot(spark, uri) is None
+    latest = latest_indicators_job(spark, uri)
+    assert "LocalTableScan" not in latest._jdf.queryExecution().executedPlan().toString()
+    assert sorted(latest.collect()) == sorted(_fresh_latest(spark, path).collect())
+    assert range_query_job(spark, uri, "2024-01-03", "2024-01-03").count() == 1
+    assert uri not in _SNAPSHOTS.get(spark, {})

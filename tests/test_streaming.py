@@ -995,3 +995,36 @@ def test_stream_heavy_hitters_restart_recovers_mg_state(spark, tmp_path):
     )
     # and run 2 genuinely processed the new file
     assert any(r["token"] == "otter" for r in all_rows)
+
+
+def test_stream_state_partitions_default_is_one_wave_of_slots(spark):
+    """The state partition count defaults to min(8, defaultParallelism):
+    4 at local[4], 8 at local[8] and above; an explicit n wins; the
+    session's width comes back afterwards.  The local[4] and local[32]
+    cases use a stand-in session (one JVM per test process)."""
+    from types import SimpleNamespace
+
+    from trading_etl_python_spark.streaming.pipeline import stream_state_partitions
+
+    class Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+        def unset(self, k):
+            self.pop(k, None)
+
+    key = "spark.sql.shuffle.partitions"
+    for slots, want in ((4, "4"), (32, "8")):
+        fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=slots), conf=Conf({key: "32"}))
+        with stream_state_partitions(fake):
+            assert fake.conf[key] == want
+        with stream_state_partitions(fake, 3):
+            assert fake.conf[key] == "3"
+        assert fake.conf[key] == "32"
+
+    before = spark.conf.get(key)
+    with stream_state_partitions(spark):
+        assert spark.conf.get(key) == str(min(8, spark.sparkContext.defaultParallelism))
+    with stream_state_partitions(spark, 5):
+        assert spark.conf.get(key) == "5"
+    assert spark.conf.get(key) == before

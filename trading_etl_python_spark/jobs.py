@@ -6,13 +6,24 @@ Spark plans (SURVEY.md §3).
   one bulk insert.  Here: scan -> one declarative indicator plan over all
   symbols -> date-partitioned upsert-ignore write.  One Spark job,
   parallel over keys, idempotent on re-run.
-- ``latest_indicators_job`` <- the planned /latest_price + /indicators
-  API reads (roadmap.md:43-47): latest gated row per symbol, and a
-  time-range slice that partition-prunes against the written table.
+- ``latest_indicators_job`` / ``range_query_job`` <- the planned
+  /latest_price + /indicators API reads (roadmap.md:43-47): latest gated
+  row per symbol, and a time-range slice that partition-prunes against
+  the written table.  Both read through a per-(session, table path)
+  snapshot in place of the reference's Redis hot-data cache
+  (roadmap.md:44-47): while the table's data files are unchanged, a
+  range read filters one held ``spark.read.parquet`` DataFrame (no new
+  listing or schema inference) and a latest read serves the rows
+  computed once, without a Spark job.
 - The consumer (streaming) executable lives in ``streaming.pipeline``.
 """
 
 from __future__ import annotations
+
+import os
+import threading
+import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,19 +47,100 @@ def backfill_job(
 def latest_indicators_job(spark: SparkSession, table_path: str) -> DataFrame:
     """/latest_price equivalent: most recent indicator row per symbol from
     the stored table (max_by aggregation, no global sort).  Ordered by
-    time alone — the table's PK (time, symbol) guarantees uniqueness."""
-    return latest_per_key(
-        spark.read.parquet(table_path), order_cols=("time",)
-    ).drop("trade_date")
+    time alone — the table's PK (time, symbol) guarantees uniqueness.
+
+    On a local table the rows are computed once per snapshot (see
+    ``_snapshot``) and kept as an Arrow table, O(symbols) rows; a repeated
+    read of unchanged files serves them as a local relation and runs no
+    Spark job.  The call that computes them runs its jobs eagerly."""
+    snap = _snapshot(spark, table_path)
+    if snap is None:
+        return _latest(spark.read.parquet(table_path))
+    if snap.latest is None:
+        plan = _latest(DataFrame(snap.jdf, spark))
+        snap.latest = (plan.toArrow(), plan.schema)
+    rows, schema = snap.latest
+    return spark.createDataFrame(rows, schema)
+
+
+def _latest(table: DataFrame) -> DataFrame:
+    return latest_per_key(table, order_cols=("time",)).drop("trade_date")
 
 
 def range_query_job(spark: SparkSession, table_path: str, lo: str, hi: str) -> DataFrame:
     """/indicators?from=&to= equivalent: a time-range read that prunes to
-    the matching trade_date partitions."""
-    return spark.read.parquet(table_path).filter(
+    the matching trade_date partitions.  On a local table it filters the
+    snapshot's DataFrame, so a repeated read of unchanged files lists
+    nothing and infers no schema."""
+    snap = _snapshot(spark, table_path)
+    table = spark.read.parquet(table_path) if snap is None else DataFrame(snap.jdf, spark)
+    return table.filter(
         (F.col("trade_date") >= F.to_date(F.lit(lo)))
         & (F.col("trade_date") <= F.to_date(F.lit(hi)))
     )
+
+
+@dataclass
+class _Snapshot:
+    files: frozenset  # _data_files() when the read below was taken
+    # the JVM side of spark.read.parquet(path): a Python DataFrame would
+    # hold its session and so keep the weak key below alive forever
+    jdf: object
+    latest: tuple | None = None  # (pyarrow.Table, StructType) once computed
+
+
+# Per-session {table path: _Snapshot}, keyed on the live session as
+# util._NPART_CACHE is, so a session's snapshots go when it does.
+_SNAPSHOTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _snapshot(spark: SparkSession, path: str) -> _Snapshot | None:
+    """The snapshot of the table at ``path`` as its data files are now;
+    None when ``path`` is not a local directory (the caller then plans
+    today's uncached read).  A changed file set rebuilds it at the cost
+    of one uncached read.  The files are listed BEFORE Spark lists them,
+    so a write landing in between leaves a snapshot newer than its
+    signature, which the next call rebuilds, never an older one that
+    would be served as current."""
+    files = _data_files(path)
+    if files is None:
+        return None
+    with _SNAPSHOTS_LOCK:
+        snap = _SNAPSHOTS.get(spark, {}).get(path)
+    if snap is None or snap.files != files:
+        snap = _Snapshot(files, spark.read.parquet(path)._jdf)
+        with _SNAPSHOTS_LOCK:
+            _SNAPSHOTS.setdefault(spark, {})[path] = snap
+    return snap
+
+
+def _data_files(path: str) -> frozenset | None:
+    """The files Spark reads under the directory ``path``, as (relative
+    path, size, mtime_ns), from one walk; None when ``path`` is not a
+    local directory.  Names Spark's listing skips are skipped here too:
+    a leading ``.`` (checksums), or a leading ``_`` outside a
+    ``col=value`` directory (``_SUCCESS``, ``_temporary``), so rewriting
+    them does not invalidate a snapshot."""
+    if not os.path.isdir(path):
+        return None
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        for name in names:
+            if hidden(name):
+                continue
+            full = os.path.join(root, name)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # removed mid-walk: not there to read
+                continue
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return frozenset(files)
 
 
 def incremental_backfill_job(

@@ -76,6 +76,12 @@ _TOUCHED: dict[str, int] = {
         "q_kcore", "q_kcore_minhash", "q_textrank", "q_dedup_clusters",
         "q_dup_weights", "q_corpus_full",
     ), 15),
+    # stream_state_partitions defaults to min(8, defaultParallelism), and
+    # run_replay_pipeline (q_stream_replay) now starts its query under it
+    **dict.fromkeys((
+        "q_stream_replay", "q_stream_sessions", "q_stream_topk",
+        "q_stream_join", "q_stream_candles",
+    ), 15),
 }
 assert set(_TOUCHED) <= set(_ALL)
 
