@@ -1,9 +1,11 @@
 from __future__ import annotations
 
+import random
+
 import networkx as nx
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -144,13 +146,17 @@ def test_dedup_clusters_long_chain_converges(spark):
     assert sum(r.is_canonical for r in out) == 1
 
 
-def test_dedup_clusters_truncated_star_still_one_label_per_node(spark):
+def test_dedup_clusters_truncated_star_still_one_label_per_node(spark, monkeypatch):
     """max_iter exhausted before the star fixpoint: labels must collapse
     to ONE per node (ADVICE r3 — a multi-labeled node would duplicate
-    doc rows through the left join), with a RuntimeWarning."""
+    doc rows through the left join), with a RuntimeWarning.  The gate is
+    closed so the star loop runs; the kernel always reaches the fixpoint."""
     import warnings
 
+    import trading_etl_python_spark.operators.graph as G
     from trading_etl_python_spark.operators.dedup import dedup_clusters
+
+    monkeypatch.setattr(G, "_KERNEL_MAX_EDGES", -1)
 
     docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
     pairs = spark.createDataFrame(
@@ -227,48 +233,6 @@ def test_curate_reliable_checkpoint_matches_local(spark, sf_dir, tmp_path):
         map(tuple, curate_corpus_full(docs, checkpoint="reliable").collect())
     )
     assert full_local == full_reliable and full_local
-
-
-def test_cc_star_equals_propagation_on_adversarial_graphs(spark):
-    """The large-star/small-star labels must equal min-label propagation
-    on shapes that stress each: a long chain (propagation's worst case),
-    a star, a triangle+tail, singleton pairs, and a random graph."""
-    import random
-
-    from trading_etl_python_spark.operators import dedup as D
-    from pyspark.sql import functions as F
-
-    rnd = random.Random(7)
-    graphs = {
-        "chain": [(i, i + 1) for i in range(40)],
-        "star": [(0, i) for i in range(1, 20)],
-        "tri_tail": [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)],
-        "pairs": [(10, 11), (20, 21), (30, 31)],
-        "random": [(rnd.randrange(60), rnd.randrange(60)) for _ in range(80)],
-    }
-    for name, es in graphs.items():
-        es = [(a, b) for a, b in es if a != b]
-        pairs = spark.createDataFrame(es, "doc_a long, doc_b long")
-        docs = pairs.select(F.col("doc_a").alias("doc_id")).unionByName(
-            pairs.select(F.col("doc_b").alias("doc_id"))
-        ).distinct()
-        star = {
-            r.doc_id: r.cluster_id
-            for r in D.dedup_clusters(docs, pairs=pairs, algorithm="star").collect()
-        }
-        # propagation needs >= diameter rounds (star needs ~log^2): give
-        # it enough for the 40-edge chain so the cross-check is fair —
-        # at the DEFAULT max_iter=30 propagation would be wrong here,
-        # which is precisely why star is the default algorithm
-        prop = {
-            r.doc_id: r.cluster_id
-            for r in D.dedup_clusters(
-                docs, pairs=pairs, algorithm="propagation", max_iter=80
-            ).collect()
-        }
-        assert star == prop, name
-        # labels are component MINIMA (canonical survivor is smallest id)
-        assert all(l <= v for v, l in star.items()), name
 
 
 def test_minhash_incremental_index_roundtrip(spark, sf_dir, tmp_path):
@@ -580,10 +544,10 @@ def test_prefix_prefilters_lossless_at_float_boundary(spark):
     assert ngram == {(0, 1): 0.07}
 
 
-def test_cc_fold_matches_star_loop_exactly(spark):
-    """r14: the small-graph in-row CC fold must reproduce the star
-    loop's labels row-for-row (max_iter below the default routes to the
-    loop, which is how both paths stay independently reachable)."""
+def test_cc_fold_matches_star_loop_exactly(spark, monkeypatch):
+    """The small-graph CC kernel must reproduce the star loop's labels
+    row-for-row (closing the gate routes to the loop)."""
+    import trading_etl_python_spark.operators.graph as G
     from trading_etl_python_spark.operators.dedup import dedup_clusters
 
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
@@ -593,8 +557,9 @@ def test_cc_fold_matches_star_loop_exactly(spark):
         + [(20, 21), (21, 22), (20, 22), (31, 30), (32, 30), (33, 30)],
         "doc_a long, doc_b long",
     )
-    fold = sorted(map(tuple, dedup_clusters(docs, pairs=pairs, max_iter=30).collect()))
-    star = sorted(map(tuple, dedup_clusters(docs, pairs=pairs, max_iter=29).collect()))
+    fold = sorted(map(tuple, dedup_clusters(docs, pairs=pairs).collect()))
+    monkeypatch.setattr(G, "_KERNEL_MAX_EDGES", -1)
+    star = sorted(map(tuple, dedup_clusters(docs, pairs=pairs).collect()))
     assert fold == star
     # chain collapses to min label 0, triangle to 20, star to 30
     lab = {d: c for d, c, _ in fold}
@@ -608,8 +573,6 @@ def test_cc_fold_random_id_path(spark):
     """One 64-node path with shuffled ids, a shape on which min-label
     propagation with one pointer jump per round needs far more than
     log2(E) rounds: every node lands in the cluster of the smallest id."""
-    import random
-
     ids = list(range(64))
     random.Random(3).shuffle(ids)
     pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "doc_a long, doc_b long")
@@ -650,19 +613,41 @@ def test_cc_kernel_matches_networkx(edges):
     assert dict(zip(out["node"].tolist(), out["label"].tolist())) == _nx_min_labels(edges)
 
 
+_rnd = random.Random(7)
+# fixed shapes that stress each path: a long chain (diameter 40), a star,
+# a triangle with a tail, disjoint pairs, and a random graph
+_ADVERSARIAL = [
+    [(i, i + 1) for i in range(40)],
+    [(0, i) for i in range(1, 20)],
+    [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)],
+    [(10, 11), (20, 21), (30, 31)],
+    [(_rnd.randrange(60), _rnd.randrange(60)) for _ in range(80)],
+]
+
+
 @given(st.lists(cc_graphs(max_nodes=64), min_size=3, max_size=3))
+@example(graphs=_ADVERSARIAL[:3])
+@example(graphs=_ADVERSARIAL[3:] + [[]])
 @settings(max_examples=3, deadline=None)
 def test_cc_both_paths_match_networkx(spark, graphs):
-    """dedup_clusters on both sides of the CC gate — max_iter=30 takes the
-    kernel, max_iter=29 the star loop — against networkx.  Three graphs
-    per example share one edge set on disjoint id ranges; ten extra docs
-    stay isolated singletons."""
+    """dedup_clusters on both sides of the CC gate — the kernel, then the
+    star loop with the gate closed — against networkx.  Three graphs per
+    example share one edge set on disjoint id ranges; ten extra docs stay
+    isolated singletons."""
+    import trading_etl_python_spark.operators.graph as G
+
     edges = [(a + k * 10**10, b + k * 10**10) for k, g in enumerate(graphs) for a, b in g]
     want = _nx_min_labels(edges)
     ids = sorted({x for e in edges for x in e} | {-i for i in range(1, 11)})
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    for max_iter in (30, 29):
-        got = {r.doc_id: r.cluster_id
-               for r in D.dedup_clusters(docs, pairs=pairs, max_iter=max_iter).collect()}
-        assert got == {i: want.get(i, i) for i in ids}
+
+    def labels():
+        return {r.doc_id: r.cluster_id
+                for r in D.dedup_clusters(docs, pairs=pairs).collect()}
+
+    assert labels() == {i: want.get(i, i) for i in ids}
+    # a function-scoped monkeypatch fixture cannot wrap a @given test
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(G, "_KERNEL_MAX_EDGES", -1)
+        assert labels() == {i: want.get(i, i) for i in ids}

@@ -85,11 +85,12 @@ def test_label_propagation_separates_cliques(spark):
     assert out == out2
 
 
-def test_fold_twins_match_loops_exactly(spark):
-    """r14: the small-graph fold fast paths (pagerank / hits / label
+def test_fold_twins_match_loops_exactly(spark, monkeypatch):
+    """r14: the small-graph kernel paths (pagerank / hits / label
     propagation / textrank) must reproduce the distributed loops
-    row-for-row — the fold is an execution-strategy change, never a
-    semantic one.  Gates are monkeypatched to force each path."""
+    row-for-row — the kernel is an execution-strategy change, never a
+    semantic one.  The one gate constant is monkeypatched to force the
+    loop."""
     from pyspark.sql import functions as F
 
     import trading_etl_python_spark.operators.graph as G
@@ -123,22 +124,17 @@ def test_fold_twins_match_loops_exactly(spark):
         lambda: G.label_propagation(pairs, iters=3),
         lambda: textrank_keywords(docs, iters=3),
     ]
-    saved = (G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES)
-    try:
-        for make in cases:
-            G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = saved
-            fold = make()
-            G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = -1, -1
-            loop = make()
-            assert [f.name for f in fold.schema] == [f.name for f in loop.schema]
-            assert sorted(map(tuple, fold.collect())) == sorted(
-                map(tuple, loop.collect())
-            )
-    finally:
-        G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = saved
+
+    def run(make):
+        df = make()
+        return [f.name for f in df.schema], sorted(map(tuple, df.collect()))
+
+    kernel = [run(make) for make in cases]
+    monkeypatch.setattr(G, "_KERNEL_MAX_EDGES", -1)
+    assert [run(make) for make in cases] == kernel
 
 
-def test_kcore_fold_matches_peel_loop_exactly(spark):
+def test_kcore_fold_matches_peel_loop_exactly(spark, monkeypatch):
     """r14: the small-graph k-core fold must reproduce the peel loop
     boolean-for-boolean (the contract is EXACTLY `rounds` synchronous
     peels, so the fold has no round-bound caveat at all)."""
@@ -153,19 +149,46 @@ def test_kcore_fold_matches_peel_loop_exactly(spark):
         + [(13, 30)],
         ["doc_a", "doc_b"],
     )
-    saved = (G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES)
-    try:
-        G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = saved
-        fold = sorted(map(tuple, G.kcore_layers(pairs).collect()))
-        G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = -1, -1
-        loop = sorted(map(tuple, G.kcore_layers(pairs).collect()))
-    finally:
-        G._FOLD_MAX_NODES, G._FOLD_MAX_EDGES = saved
+    fold = sorted(map(tuple, G.kcore_layers(pairs).collect()))
+    monkeypatch.setattr(G, "_KERNEL_MAX_EDGES", -1)
+    loop = sorted(map(tuple, G.kcore_layers(pairs).collect()))
     assert fold == loop
     c = dict(fold)
     assert c[1] == c[2] == c[3] == 2          # triangle: 2-core
     assert c[10] == c[11] == c[12] == c[13] == 3  # 4-clique: 3-core
     assert c[20] == c[23] == 1 and c[30] == 1     # chain ends / pendant
+
+
+def _build_jobs(spark, group, fn) -> int:
+    """Spark jobs fired by ``fn()``, counted through a job group once the
+    listener bus has delivered every job start (as tests/test_jobs.py)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_graph_gate_fires_one_count_and_no_node_count(spark):
+    """Building the kernel path costs the gate's one count of the edge
+    table, with no node-count job.  pagerank: 1 job for its eager edge
+    checkpoint + 5 for counting the normalized edges (out-weight
+    aggregate, join, count); label_propagation: 2 for counting its
+    pairs."""
+    import trading_etl_python_spark.operators.graph as G
+
+    edges = spark.createDataFrame(
+        [(1, 2, 2.0), (2, 1, 1.0), (1, 3, 1.0), (3, 4, 5.0), (4, 2, 1.0), (5, 1, 3.0)],
+        ["src", "dst", "w"],
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 6), (6, 4), (7, 8)], ["doc_a", "doc_b"]
+    )
+    assert _build_jobs(spark, "gate-pagerank", lambda: G.pagerank(edges)) == 6
+    assert _build_jobs(spark, "gate-lpa", lambda: G.label_propagation(pairs)) == 2
 
 
 def test_graph_entry_points_on_empty_input(spark):

@@ -261,3 +261,20 @@ def test_non_local_directory_path_reads_uncached(spark, tmp_path):
     assert sorted(latest.collect()) == sorted(_fresh_latest(spark, path).collect())
     assert range_query_job(spark, uri, "2024-01-03", "2024-01-03").count() == 1
     assert uri not in _SNAPSHOTS.get(spark, {})
+
+
+def test_reads_refuse_a_table_with_no_data_files(spark, tmp_path):
+    """A table directory written from an empty DataFrame holds no data
+    file, so there is no schema to read: both reads raise a ValueError
+    that names the path."""
+    import pytest
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame([(_ts(2), 1, 10.0)], _TICKS).withColumn(
+        "trade_date", F.to_date("time")
+    ).limit(0).write.partitionBy("trade_date").parquet(path)
+    with pytest.raises(ValueError, match="no data files") as latest:
+        latest_indicators_job(spark, path)
+    with pytest.raises(ValueError, match="no data files") as sliced:
+        range_query_job(spark, path, "2024-01-01", "2024-01-31")
+    assert path in str(latest.value) and path in str(sliced.value)

@@ -43,8 +43,7 @@ def test_upsert_ignore_write_is_clustered_by_partition(spark, sf_dir, tmp_path):
     (dates) tiny files — measured 736 -> 23 files and a 5x faster
     write on the sf0.1 backfill seed.  Bound: no more files than
     touched partitions (the k sub-bucket split only engages above
-    SPARK_GRAFT_UPSERT_ROWS_PER_FILE rows per date, and nothing here
-    is near it)."""
+    _UPSERT_ROWS_PER_FILE rows per date, and nothing here is near it)."""
     import glob
 
     path = str(tmp_path / "tbl")
@@ -53,6 +52,25 @@ def test_upsert_ignore_write_is_clustered_by_partition(spark, sf_dir, tmp_path):
     parts = [d for d in os.listdir(path) if d.startswith("trade_date=")]
     files = glob.glob(os.path.join(path, "trade_date=*", "*.parquet"))
     assert len(files) <= len(parts)
+
+
+def test_upsert_ignore_splits_a_hot_date_by_rows_per_file(spark, tmp_path, monkeypatch):
+    """A one-date batch above _UPSERT_ROWS_PER_FILE rows splits into
+    ceil(rows / rows_per_file) files, and every row lands once."""
+    import datetime as dt
+    import glob
+    import math
+
+    import trading_etl_python_spark.sinks.parquet as P
+
+    monkeypatch.setattr(P, "_UPSERT_ROWS_PER_FILE", 4)
+    rows = [(dt.datetime(2024, 1, 2, 9, m), s, float(s)) for m in range(2) for s in range(7)]
+    batch = spark.createDataFrame(rows, "time timestamp, symbol int, close double")
+    path = str(tmp_path / "tbl")
+    assert upsert_ignore(batch, path) == len(rows)
+    files = glob.glob(os.path.join(path, "trade_date=2024-01-02", "*.parquet"))
+    assert len(files) == math.ceil(len(rows) / 4)
+    assert spark.read.parquet(path).count() == len(rows)
 
 
 def test_upsert_ignore_null_partition_stays_idempotent(spark):

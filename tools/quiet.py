@@ -1,6 +1,6 @@
-"""Warm+quiet minimum-of-N re-measure for specific registry queries —
-the generalization of r10's tools/embed_quiet.py (which settled
-q_embed_neardup's 7.44x as a cold-single-sample artifact).
+"""Warm+quiet minimum-of-N re-measure for specific registry queries
+(e.g. q_embed_neardup, whose r9 7.44x this protocol settled as a
+cold-single-sample artifact).
 
 One session; per (query, sf_dir): one untimed warmup pass, then N timed
 passes (noop write, same execution protocol as tools/sweep.py); report

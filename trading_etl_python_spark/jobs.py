@@ -52,7 +52,8 @@ def latest_indicators_job(spark: SparkSession, table_path: str) -> DataFrame:
     On a local table the rows are computed once per snapshot (see
     ``_snapshot``) and kept as an Arrow table, O(symbols) rows; a repeated
     read of unchanged files serves them as a local relation and runs no
-    Spark job.  The call that computes them runs its jobs eagerly."""
+    Spark job.  The call that computes them runs its jobs eagerly.
+    Raises ValueError when a local table directory holds no data file."""
     snap = _snapshot(spark, table_path)
     if snap is None:
         return _latest(spark.read.parquet(table_path))
@@ -71,7 +72,8 @@ def range_query_job(spark: SparkSession, table_path: str, lo: str, hi: str) -> D
     """/indicators?from=&to= equivalent: a time-range read that prunes to
     the matching trade_date partitions.  On a local table it filters the
     snapshot's DataFrame, so a repeated read of unchanged files lists
-    nothing and infers no schema."""
+    nothing and infers no schema.  Raises ValueError when a local table
+    directory holds no data file."""
     snap = _snapshot(spark, table_path)
     table = spark.read.parquet(table_path) if snap is None else DataFrame(snap.jdf, spark)
     return table.filter(
@@ -102,10 +104,19 @@ def _snapshot(spark: SparkSession, path: str) -> _Snapshot | None:
     of one uncached read.  The files are listed BEFORE Spark lists them,
     so a write landing in between leaves a snapshot newer than its
     signature, which the next call rebuilds, never an older one that
-    would be served as current."""
+    would be served as current.
+
+    A directory with no data file (e.g. written from an empty DataFrame)
+    has no schema to read, so it is refused with a ValueError rather
+    than Spark's UNABLE_TO_INFER_SCHEMA."""
     files = _data_files(path)
     if files is None:
         return None
+    if not files:
+        raise ValueError(
+            f"table {path!r} holds no data files: the API reads need a table "
+            "with at least one written row to take its schema from"
+        )
     with _SNAPSHOTS_LOCK:
         snap = _SNAPSHOTS.get(spark, {}).get(path)
     if snap is None or snap.files != files:

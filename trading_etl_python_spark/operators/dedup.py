@@ -644,16 +644,22 @@ def contamination(
 
 
 def _cc_star_labels(edges: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", 2014) — O(log^2 n) rounds worst case vs O(diameter) for
-    plain label propagation, the difference that matters on chain-shaped
-    components.  Each round is one groupBy-min plus one join, all keys
-    fixed-width node ids; ``localCheckpoint`` truncates lineage per
-    round.
+    """Connected components of ``edges`` ((e_a, e_b) pairs, any
+    orientation): (v, l) with l = component-minimum node id, for every
+    node incident to an edge.  Two paths, identical labels:
 
-    ``edges``: (e_a, e_b) pairs, any orientation.  Returns (v, l) with
-    l = component-minimum node id, for every node incident to an edge."""
+    - within the ``graph._KERNEL_MAX_EDGES`` gate, union-find in the
+      small-graph numpy kernel, which reaches the fixpoint on every input;
+    - above it, alternating large-star / small-star rounds (Kiveris et
+      al., "Connected Components in MapReduce and Beyond", 2014) —
+      O(log^2 n) rounds worst case vs O(diameter) for plain label
+      propagation, the difference that matters on chain-shaped
+      components.  Each round is one groupBy-min plus one join, all keys
+      fixed-width node ids; ``localCheckpoint`` truncates lineage per
+      round.  ``max_iter`` bounds these rounds; when it runs out the
+      labels collapse to one per node with a RuntimeWarning."""
+    from .graph import _graph_kernel
+
     # canonical orientation: big -> small, no self-loops
     C = (
         edges.select(
@@ -661,25 +667,15 @@ def _cc_star_labels(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         )
         .filter(F.col("u") != F.col("w"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    # small graphs (r14): near-dup edge sets are orders of magnitude
-    # smaller than the corpus, and the star loop pays per-round
-    # eager-checkpoint jobs + checksum collects on that tiny set
-    # (measured sf0.1: 4 rounds + 2 checksums ~= 4.3 s of a 9 s query, on
-    # a 256-edge graph).  Below the bound the whole contraction is one
-    # union-find in the graph.py numpy kernel, which reaches the
-    # component-min labels on every input; above it the star loop
-    # stands.  Callers that TRUNCATE the contraction (max_iter below the
-    # default) keep the loop: the kernel always finishes, which is a
-    # different contract than best-effort-within-k-rounds.
-    n_edges = C.count()
-    if n_edges <= 100_000 and max_iter >= 30:
-        from .graph import _graph_kernel
-
-        return _graph_kernel(C, "cc").select(
-            F.col("node").alias("v"), F.col("label").alias("l")
-        )
+    # near-dup edge sets are orders of magnitude smaller than the corpus,
+    # and the star loop pays per-round eager-checkpoint jobs + checksum
+    # collects on that tiny set (measured sf0.1: 4 rounds + 2 checksums
+    # ~= 4.3 s of a 9 s query, on a 256-edge graph)
+    kernel = _graph_kernel(C, "cc")
+    if kernel is not None:
+        return kernel.select(F.col("node").alias("v"), F.col("label").alias("l"))
 
     def checksum(c: DataFrame):
         # bit_xor, not sum: ANSI mode raises on long-sum overflow
@@ -755,7 +751,6 @@ def dedup_clusters(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     max_iter: int = 30,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Near-dup CLUSTERING: connected components over the pairwise
     near-dup graph, labeling every doc with the min doc id of its
@@ -764,24 +759,17 @@ def dedup_clusters(
     keeping one doc per *component*, not per pair, so A~B, B~C collapses
     to {A} even when A!~C directly.
 
-    Two algorithms, identical labels (cross-checked by tests):
+    Labels come from ``_cc_star_labels``: the small-graph union-find
+    kernel within the graph.py gate, the large-star/small-star loop
+    (O(log^2 n) rounds regardless of component shape, at most
+    ``max_iter``) above it.  Tests check both paths against
+    ``networkx.connected_components``.  Either runs ONLY over nodes that
+    touch an edge — in a deduped corpus that working set is orders of
+    magnitude smaller than the corpus (most docs are isolated
+    singletons).  Isolated docs get their singleton label via one final
+    left join.
 
-    - ``algorithm="star"`` (default, the scale path): alternating
-      large-star/small-star rounds (``_cc_star_labels``) — O(log^2 n)
-      rounds regardless of component shape.
-    - ``algorithm="propagation"``: iterative min-label propagation,
-      <= graph-diameter rounds; kept as the independent cross-check
-      implementation (near-dup graphs are overwhelmingly tiny
-      components, where its constant factor wins).
-
-    Returns (id_col, cluster_id, is_canonical) for EVERY input doc;
-    isolated docs are their own singleton cluster.
-
-    The propagation loop runs ONLY over nodes that touch an edge — in a
-    deduped corpus that working set is orders of magnitude smaller than
-    the corpus (most docs are isolated singletons), so each round's join
-    and min-agg are sized by the near-dup graph, not the data.  Isolated
-    docs get their singleton label via one final left join.
+    Returns (id_col, cluster_id, is_canonical) for EVERY input doc.
 
     Default pair source (r8 VERDICT #2): ``minhash_banded_verified_pairs``
     — banded-MinHash candidates + exact-Jaccard verify, the bounded
@@ -796,34 +784,9 @@ def dedup_clusters(
         pairs = minhash_banded_verified_pairs(
             df, threshold=threshold, n=n, id_col=id_col
         ).select("doc_a", "doc_b")
-    fwd = pairs.select(F.col("doc_a").alias("e_a"), F.col("doc_b").alias("e_b"))
-    if algorithm == "star":
-        labels = _cc_star_labels(fwd, max_iter)
-    elif algorithm == "propagation":
-        edges = fwd.unionAll(
-            pairs.select(F.col("doc_b").alias("e_a"), F.col("doc_a").alias("e_b"))
-        ).localCheckpoint()
-        labels = edges.select(F.col("e_a").alias("v")).distinct().withColumn(
-            "l", F.col("v")
-        )
-        for _ in range(max_iter):
-            nbr = edges.join(labels, edges.e_b == labels.v).select(
-                F.col("e_a").alias("v"), F.col("l")
-            )
-            new_labels = (
-                labels.unionByName(nbr).groupBy("v").agg(F.min("l").alias("l"))
-            ).localCheckpoint()
-            n_changed = (
-                new_labels.alias("nw")
-                .join(labels.alias("old"), "v")
-                .filter(F.col("nw.l") < F.col("old.l"))
-                .count()
-            )
-            labels = new_labels
-            if n_changed == 0:
-                break
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    labels = _cc_star_labels(
+        pairs.select(F.col("doc_a").alias("e_a"), F.col("doc_b").alias("e_b")), max_iter
+    )
     out = df.select(F.col(id_col)).join(
         labels.withColumnRenamed("v", id_col), id_col, "left"
     )

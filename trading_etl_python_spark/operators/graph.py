@@ -18,9 +18,12 @@ scalar is the node COUNT (one long).  Dangling-node mass (out-degree-0
 nodes) is redistributed uniformly each iteration via a 1-row broadcast —
 the standard stochastic-matrix fix, kept in-plan.
 
-Small graphs skip the loop: ``_graph_kernel`` ships the edge list to ONE
-``applyInPandas`` group, indexes the nodes once (``np.unique`` over the
-endpoints, i.e. node order) and runs the whole iteration in numpy.  Each
+Graphs of at most ``_KERNEL_MAX_EDGES`` edges skip the loop.
+``_graph_kernel`` is the one place that makes that choice, from one
+count of the edge table its caller checkpoints; on a small graph it
+ships the edge list to ONE ``applyInPandas`` group, indexes the nodes
+once (``np.unique`` over the endpoints, i.e. node order) and runs the
+whole iteration in numpy (the kernel-vs-loop table is at the gate).  Each
 algorithm's kernel reproduces its loop's arithmetic exactly: integer
 counts and 1e-12-quantized int64 sums are order-free, and the one plain
 double sum (PageRank's) runs sequentially in a fixed order.
@@ -41,17 +44,29 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Small-graph gate: below these bounds the iterative DataFrame loop is
-# pure per-level orchestration — each iteration pays fixed driver/job/
-# stage latency on microscopic state (measured r14: q_textrank 89 stages
-# / 2.0 s task time for 4.4 s wall, q_pagerank 123 stages, q_hits 259
-# stages) — so the whole iteration runs in ``_graph_kernel``: one Python
-# task, O(V+E) numpy work per iteration.  Above them the distributed loop
-# is the right shape and stands unchanged.  The values are the ones the
-# earlier packed-row folds were sized with; re-sizing them from a
-# measured kernel-vs-loop crossover is ROADMAP item 1 step 2, still open.
-_FOLD_MAX_NODES = 65_536
-_FOLD_MAX_EDGES = 1_000_000
+# Small-graph gate, the one policy every entry point shares:
+# ``_graph_kernel`` counts the edge table it is handed and runs the whole
+# iteration in one Python task (O(V+E) numpy work per iteration) at or
+# below this many edges; above it the caller takes its distributed loop.
+# One count and no node count: an edge list has V <= 2E, so E alone
+# bounds the kernel's work.
+#
+# Kernel vs loop, seconds to build + run (noop write), two samples each,
+# local[4] on 4 cores; random graphs with xxhash64 endpoints, edge table
+# checkpointed before timing; CC is ``dedup._cc_star_labels``:
+#
+#   edges / nodes  pagerank            label propagation   CC
+#                  kernel    loop      kernel    loop      kernel    loop
+#   10k / 6.6k     0.96-1.05 4.7-5.8   0.51-0.52 2.3-3.0   0.47-0.58 5.2-5.5
+#   100k / 66k     1.12-1.16 4.7-5.1   0.63-0.71 4.1-4.2   0.70-0.77 8.1-8.6
+#   300k / 198k    1.71-1.90 7.4-8.7   1.31-1.71 7.1-8.3   1.41      12.4-13.7
+#   1M / 660k      3.64-4.14 16.2-16.6 4.87-4.97 17.0-17.5 3.29-3.56 28.3-32.5
+#   1M / 65.5k     2.57-2.58 8.2-9.3   3.55-3.58 11.9-14.6 2.39-2.77 8.7-10.6
+#
+# The kernel wins at every measured size (3.2-10x), so the cap is not a
+# crossover: it bounds what one task holds (the whole edge list, as Arrow
+# and then numpy, in one Python worker).
+_KERNEL_MAX_EDGES = 1_000_000
 
 
 def _half_up(x: np.ndarray) -> np.ndarray:
@@ -185,16 +200,23 @@ def _kernel_frame(pdf: pd.DataFrame, algo: str, params: dict) -> pd.DataFrame:
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def _graph_kernel(edges: DataFrame, algo: str, **params) -> DataFrame:
-    """Run one small-graph algorithm in a single Python task.  ``edges``
+def _graph_kernel(edges: DataFrame, algo: str, **params) -> DataFrame | None:
+    """Run one small-graph algorithm in a single Python task, or return
+    None when ``edges`` holds more than ``_KERNEL_MAX_EDGES`` rows (the
+    caller then runs its loop).  The gate's count is the one job fired
+    here, so pass a checkpointed frame the loop can reuse.  ``edges``
     holds (src, dst[, weight]) as its columns, in that order; the node
     set is every endpoint.  Returns (node, <algorithm columns>), one row
     per node, unrounded; an empty edge list returns no rows."""
+    if edges.count() > _KERNEL_MAX_EDGES:
+        return None
     s, d = edges.columns[:2]
     node_t = edges.select(s).unionAll(edges.select(d)).schema[0].dataType.simpleString()
     schema = f"node {node_t}, " + _KERNELS[algo][1].format(node=node_t)
     # one constant group (a string: an integer literal reads as ordinal)
-    return edges.groupBy(F.lit("g")).applyInPandas(
+    # over one partition, which needs no exchange: the count above has
+    # already materialized a checkpointed input
+    return edges.coalesce(1).groupBy(F.lit("g")).applyInPandas(
         lambda pdf: _kernel_frame(pdf, algo, params), schema
     )
 
@@ -221,20 +243,16 @@ def pagerank(
     outw = edges.groupBy(src).agg(F.sum(weight).alias("_ow"))
     norm = edges.join(outw, src).select(
         F.col(src), F.col(dst), (F.col(weight) / F.col("_ow")).alias("_frac")
-    )
+    ).localCheckpoint(eager=False)
+    pr = _graph_kernel(norm, "pagerank", damping=damping, iters=iters, quantize=False)
+    if pr is not None:
+        return pr.select("node", F.round("score", 6).alias("score"))
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
     n = nodes.count()
-    # small graphs run in the numpy kernel — see _FOLD_MAX_NODES.  Counts
-    # are cheap here (both sides derive from the checkpointed edge table).
-    if n <= _FOLD_MAX_NODES:
-        norm = norm.localCheckpoint(eager=False)
-        if norm.count() <= _FOLD_MAX_EDGES:
-            pr = _graph_kernel(norm, "pagerank", damping=damping, iters=iters, quantize=False)
-            return pr.select("node", F.round("score", 6).alias("score"))
     # parallelism tracks the GRAPH size, not the (often much larger)
     # edge-construction input: below the threshold the per-iteration
     # state is driver-page-sized and 32-task stages are pure scheduler
@@ -372,21 +390,15 @@ def label_propagation(
     # materialize the caller's pair-construction plan once BEFORE the
     # symmetrizing union (which references it twice — an un-checkpointed
     # upstream would run twice inside the union's checkpoint)
-    p = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint()
-    # parallelism tracks the graph size, same rationale and threshold as
-    # ``pagerank``: below it the loop runs single-task stages
-    n_pairs = p.count()
-    if n_pairs <= 100_000:
-        p = p.coalesce(1)
+    p = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint(eager=False)
+    # small graphs run in the numpy kernel (integer counts, same
+    # tie-break: exact) — see _KERNEL_MAX_EDGES
+    out = _graph_kernel(p, "lpa", iters=iters)
+    if out is not None:
+        return out
     edges = p.unionAll(
         p.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
-    # small graphs run in the numpy kernel (integer counts, same
-    # tie-break: exact) — see _FOLD_MAX_NODES
-    if 2 * n_pairs <= _FOLD_MAX_EDGES:
-        nodes = edges.select(F.col("u").alias("node")).distinct()
-        if nodes.count() <= _FOLD_MAX_NODES:
-            return _graph_kernel(p, "lpa", iters=iters)
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -430,7 +442,16 @@ def hits(
     caller's edge construction (checkpointed once)."""
     e = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d"), F.col(weight).cast("long").alias("wl")
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
+    # small graphs run in the numpy kernel instead of 5 x 4 jobs — exact
+    # (quantized-integer contributions), see _KERNEL_MAX_EDGES
+    out = _graph_kernel(e, "hits", iters=iters)
+    if out is not None:
+        return out.select(
+            "node",
+            F.round("authority", 6).alias("authority"),
+            F.round("hub", 6).alias("hub"),
+        )
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("d").alias("node")))
@@ -438,14 +459,6 @@ def hits(
         .localCheckpoint()
     )
     n = nodes.count()
-    # small graphs run in the numpy kernel instead of 5 x 4 jobs — exact
-    # (quantized-integer contributions), see _FOLD_MAX_NODES
-    if n <= _FOLD_MAX_NODES and e.count() <= _FOLD_MAX_EDGES:
-        return _graph_kernel(e, "hits", iters=iters).select(
-            "node",
-            F.round("authority", 6).alias("authority"),
-            F.round("hub", 6).alias("hub"),
-        )
     total = e.agg(F.sum("wl")).collect()[0][0]
     frac = e.select(
         "s", "d", (F.col("wl").cast("double") / F.lit(float(total))).alias("frac")
@@ -526,22 +539,14 @@ def kcore_layers(
     # checkpoint the caller's pair construction BEFORE symmetrizing:
     # unionAll(pairs, pairs) would inline the (typically expensive)
     # build twice into one plan and double its cost
-    p0 = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint()
+    p0 = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).localCheckpoint(eager=False)
     # small graphs run in the numpy kernel: the peel loop is 2 k-values
     # x `rounds` x (degree agg + 2 joins + every-2nd-round eager
     # checkpoint) on a tiny edge set, and the kernel peels exactly
     # `rounds` times per k — boolean-for-boolean the loop
-    n_pairs = p0.count()
-    if 2 * n_pairs <= _FOLD_MAX_EDGES:
-        e2 = p0.unionAll(p0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        nodes = e2.select(F.col("u").alias("node")).distinct()
-        if nodes.count() <= _FOLD_MAX_NODES:
-            return _graph_kernel(p0, "kcore", rounds=rounds)
-    # parallelism tracks the GRAPH size (the pagerank rule): the peel
-    # loop is 2 x rounds x (degree agg + 2 joins) — on a small edge set
-    # 32-task stages are pure scheduler overhead
-    if n_pairs <= 100_000:
-        p0 = p0.coalesce(1).localCheckpoint()
+    out = _graph_kernel(p0, "kcore", rounds=rounds)
+    if out is not None:
+        return out
     e0 = p0.unionAll(p0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     all_nodes = e0.select(F.col("u").alias("node")).distinct().localCheckpoint()
 

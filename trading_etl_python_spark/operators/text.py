@@ -1451,21 +1451,21 @@ def textrank_keywords(
         F.col("u").alias("src"), F.col("v").alias("dst"),
         (F.col("w") / F.col("ow")).alias("frac"),
     ).localCheckpoint(eager=False)
-    nodes = edges.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=False)
-    n_nodes = nodes.count()
     # small graphs (r14, the q_ewma_sql lesson): on a closed vocabulary
     # the co-occurrence graph is vocabulary-sized — the 8-iteration
     # DataFrame loop was pure per-level orchestration (measured: 89
-    # stages / 2.0 s task time for a 4.4 s wall at sf0.1).  Below the
-    # graph.py bounds the whole power iteration runs in the numpy kernel;
+    # stages / 2.0 s task time for a 4.4 s wall at sf0.1).  Within the
+    # graph.py gate the whole power iteration runs in the numpy kernel;
     # the quantized integer contribution sums make kernel == loop EXACT
-    # in any order.  An open-vocabulary corpus above the bounds takes the
-    # loop unchanged.
-    from .graph import _FOLD_MAX_EDGES, _FOLD_MAX_NODES, _graph_kernel
+    # in any order.  An open-vocabulary corpus above it takes the loop
+    # unchanged.
+    from .graph import _graph_kernel
 
-    if n_nodes <= _FOLD_MAX_NODES and norm.count() <= _FOLD_MAX_EDGES:
-        pr = _graph_kernel(norm, "pagerank", damping=d, iters=iters, quantize=True)
+    pr = _graph_kernel(norm, "pagerank", damping=d, iters=iters, quantize=True)
+    if pr is not None:
         return pr.select("node", F.round("score", 6).alias("score"))
+    nodes = edges.select(F.col("u").alias("node")).distinct().localCheckpoint(eager=False)
+    n_nodes = nodes.count()
     pr = nodes.withColumn("score", F.lit(1.0) / F.lit(float(n_nodes)))
     for i in range(iters):
         contrib = (

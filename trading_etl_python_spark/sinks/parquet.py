@@ -22,10 +22,19 @@ not present in this container).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+#: Rows per file of an ``upsert_ignore`` append.  Cost law: a batch of n
+#: rows over d touched dates writes d x k files, k = ceil(n / (d x this)),
+#: so a file holds at most ~this many rows on average and a hot date
+#: spreads over k write tasks instead of pinning one.  4M indicator rows
+#: is hundreds of MB of parquet, inside the 128 MB-1 GB file goal.
+_UPSERT_ROWS_PER_FILE = 4_000_000
 
 
 def _table_exists(path: str, partition_col: str) -> bool:
@@ -145,10 +154,9 @@ def upsert_ignore(
             # (k=1), so ~one file per date, written in parallel across
             # dates.  At scale a hot date cannot pin the write to one
             # task: k = ceil(rows / (dates x rows_per_file)) sub-buckets
-            # split it, bounded by SPARK_GRAFT_UPSERT_ROWS_PER_FILE
-            # (default 4M rows ~ hundreds of MB — the guide's 128 MB-1 GB
-            # file goal); the bucket key is a deterministic xxhash64 of
-            # the PK so task retries re-produce the same placement
+            # split it (_UPSERT_ROWS_PER_FILE); the bucket key is a
+            # deterministic xxhash64 of the PK so task retries re-produce
+            # the same placement
             # (guide §2.5).  ``touched`` comes from the existing-table
             # prune; on a first write it is one tiny distinct over the
             # already-persisted batch.  In the existing-table branch the
@@ -158,15 +166,9 @@ def upsert_ignore(
             # recomputing ``touched`` post-anti-join would cost a second
             # distinct scan of the batch every run — the wrong trade at
             # every scale (empty tasks are ~free; the scan is not).
-            import math
-            import os
-
             if not touched:
                 touched = collect_touched_partitions(incoming, partition_col)
-            rows_per_file = int(
-                os.environ.get("SPARK_GRAFT_UPSERT_ROWS_PER_FILE", str(4_000_000))
-            )
-            k = max(1, math.ceil(n / (max(1, len(touched)) * rows_per_file)))
+            k = max(1, math.ceil(n / (max(1, len(touched)) * _UPSERT_ROWS_PER_FILE)))
             bucket = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(k))
             (
                 incoming.repartition(
