@@ -3,7 +3,7 @@ from __future__ import annotations
 import random
 
 import networkx as nx
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -609,8 +609,9 @@ def test_cc_kernel_matches_networkx(edges):
     from trading_etl_python_spark.operators.graph import _kernel_frame
 
     canon = sorted({(max(a, b), min(a, b)) for a, b in edges if a != b})
-    out = _kernel_frame(pd.DataFrame(canon, columns=["u", "w"]), "cc", {})
-    assert dict(zip(out["node"].tolist(), out["label"].tolist())) == _nx_min_labels(edges)
+    u, w = (pa.array([e[i] for e in canon], pa.int64()) for i in (0, 1))
+    out = _kernel_frame(pa.table({"u": u, "w": w}), "cc", {})
+    assert dict(zip(out["node"].to_pylist(), out["label"].to_pylist())) == _nx_min_labels(edges)
 
 
 _rnd = random.Random(7)

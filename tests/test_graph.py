@@ -174,10 +174,10 @@ def _build_jobs(spark, group, fn) -> int:
 
 def test_small_graph_gate_fires_one_count_and_no_node_count(spark):
     """Building the kernel path costs the gate's one count of the edge
-    table, with no node-count job.  pagerank: 1 job for its eager edge
-    checkpoint + 5 for counting the normalized edges (out-weight
-    aggregate, join, count); label_propagation: 2 for counting its
-    pairs."""
+    table and one Arrow collect of it, with no node-count job.  pagerank:
+    1 job for its eager edge checkpoint + 5 for counting the normalized
+    edges (out-weight aggregate, join, count) + 1 collect;
+    label_propagation: 2 for counting its pairs + 1 collect."""
     import trading_etl_python_spark.operators.graph as G
 
     edges = spark.createDataFrame(
@@ -187,8 +187,44 @@ def test_small_graph_gate_fires_one_count_and_no_node_count(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5), (5, 6), (6, 4), (7, 8)], ["doc_a", "doc_b"]
     )
-    assert _build_jobs(spark, "gate-pagerank", lambda: G.pagerank(edges)) == 6
-    assert _build_jobs(spark, "gate-lpa", lambda: G.label_propagation(pairs)) == 2
+    assert _build_jobs(spark, "gate-pagerank", lambda: G.pagerank(edges)) == 7
+    assert _build_jobs(spark, "gate-lpa", lambda: G.label_propagation(pairs)) == 3
+
+
+def test_small_graph_result_is_a_local_relation(spark):
+    """The kernel runs in the driver and returns a local relation:
+    collecting a small pagerank fires no job, and no stage of its plan
+    runs Python."""
+    import trading_etl_python_spark.operators.graph as G
+
+    edges = spark.createDataFrame(
+        [(1, 2, 2.0), (2, 1, 1.0), (1, 3, 1.0), (3, 4, 5.0), (4, 2, 1.0), (5, 1, 3.0)],
+        ["src", "dst", "w"],
+    )
+    pr = G.pagerank(edges)
+    rows = []
+    assert _build_jobs(spark, "collect-pagerank", lambda: rows.extend(pr.collect())) == 0
+    assert len(rows) == 5
+    plan = pr._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan and "LocalTableScan" in plan, plan
+
+
+def test_graph_kernel_above_the_cap_fires_the_count_alone(spark, monkeypatch):
+    """Above ``_KERNEL_MAX_EDGES`` the gate returns None after its count:
+    no edge is collected to the driver."""
+    import trading_etl_python_spark.operators.graph as G
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 6), (6, 4), (7, 8)], ["u", "v"]
+    ).localCheckpoint()
+    count_jobs = _build_jobs(spark, "count-pairs", pairs.count)
+    monkeypatch.setattr(G, "_KERNEL_MAX_EDGES", 5)
+    out = []
+    jobs = _build_jobs(
+        spark, "gate-closed", lambda: out.append(G._graph_kernel(pairs, "lpa", iters=3))
+    )
+    assert out == [None]
+    assert jobs == count_jobs
 
 
 def test_graph_entry_points_on_empty_input(spark):

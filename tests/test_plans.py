@@ -319,6 +319,29 @@ def test_spread_probe_is_skipped_or_memoized(spark, monkeypatch):
         U._NPART_CACHE.clear()
 
 
+def test_spread_keyed_factor_at_or_above_width_skips_the_probe(spark):
+    """Keyed with ``n <= factor`` the target is n whatever the current
+    width, so spread fires no job even over a frame whose width probe
+    would run its shuffle stage under AQE."""
+    import trading_etl_python_spark.util as U
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n <= 16
+    sc = spark.sparkContext
+    df = (
+        spark.range(1000).groupBy((F.col("id") % 37).alias("k"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    sc.setJobGroup("spread-keyed-factor", "spread-keyed-factor")
+    try:
+        out = U.spread(df, "k", factor=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("spread-keyed-factor")
+    assert out.rdd.getNumPartitions() == n
+
+
 def test_ngram_pairs_shingle_subtree_computes_twice(spark, sf_dir):
     """The pair self-join's sides must be the same shingle subtree —
     exactly 2 document scans in the executed plan, not the 4 the old

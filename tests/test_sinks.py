@@ -36,6 +36,19 @@ def test_upsert_ignore_is_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == 200
 
 
+def test_upsert_ignore_into_a_table_created_empty(spark, sf_dir, tmp_path):
+    """The reference's order: DDL creates the table (setup.py), then the
+    backfill inserts.  A table written from an empty frame holds no data
+    file; upserting into it appends every row, and a replay appends 0."""
+    path = str(tmp_path / "tbl")
+    batch = _sample(spark, sf_dir)
+    write_indicator_table(batch.limit(0), path)
+    assert not [n for n in os.listdir(path) if n.endswith(".parquet")]
+    assert upsert_ignore(batch, path) == 200
+    assert upsert_ignore(batch, path) == 0
+    assert spark.read.parquet(path).count() == 200
+
+
 def test_upsert_ignore_write_is_clustered_by_partition(spark, sf_dir, tmp_path):
     """r13 (guide §6): the append is clustered by an explicit
     repartition on (partition value, PK-hash bucket), so a small batch

@@ -649,7 +649,9 @@ def _cc_star_labels(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     node incident to an edge.  Two paths, identical labels:
 
     - within the ``graph._KERNEL_MAX_EDGES`` gate, union-find in the
-      small-graph numpy kernel, which reaches the fixpoint on every input;
+      small-graph numpy kernel, run in the driver on the collected edge
+      list; it reaches the fixpoint on every input and returns a local
+      relation;
     - above it, alternating large-star / small-star rounds (Kiveris et
       al., "Connected Components in MapReduce and Beyond", 2014) —
       O(log^2 n) rounds worst case vs O(diameter) for plain label

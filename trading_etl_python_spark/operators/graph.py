@@ -1,5 +1,5 @@
 """Iterative graph algorithms: distributed DataFrame loops, plus one
-single-task numpy kernel for small graphs.
+numpy kernel that runs small graphs in the driver.
 
 Connected components (large-star/small-star) lives in
 ``operators/dedup.py`` next to its near-dup consumer; this module holds
@@ -21,12 +21,14 @@ the standard stochastic-matrix fix, kept in-plan.
 Graphs of at most ``_KERNEL_MAX_EDGES`` edges skip the loop.
 ``_graph_kernel`` is the one place that makes that choice, from one
 count of the edge table its caller checkpoints; on a small graph it
-ships the edge list to ONE ``applyInPandas`` group, indexes the nodes
-once (``np.unique`` over the endpoints, i.e. node order) and runs the
-whole iteration in numpy (the kernel-vs-loop table is at the gate).  Each
-algorithm's kernel reproduces its loop's arithmetic exactly: integer
-counts and 1e-12-quantized int64 sums are order-free, and the one plain
-double sum (PageRank's) runs sequentially in a fixed order.
+collects the edge list to the driver as Arrow, indexes the nodes once
+(``np.unique`` over the endpoints, i.e. node order), runs the whole
+iteration in numpy in the driver process, and hands the result back as
+a local relation, so no stage of the query needs a Python worker (the
+kernel-vs-loop table is at the gate).  Each algorithm's kernel
+reproduces its loop's arithmetic exactly: integer counts and
+1e-12-quantized int64 sums are order-free, and the one plain double sum
+(PageRank's) runs sequentially in a fixed order.
 
 Numeric parity with the SQL oracle: all arithmetic in IEEE doubles with
 identical literals; per-iteration sums differ only in accumulation order
@@ -36,36 +38,38 @@ identical literals; per-iteration sums differ only in accumulation order
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
-import pandas as pd
-from pyspark import cloudpickle
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Small-graph gate, the one policy every entry point shares:
-# ``_graph_kernel`` counts the edge table it is handed and runs the whole
-# iteration in one Python task (O(V+E) numpy work per iteration) at or
-# below this many edges; above it the caller takes its distributed loop.
-# One count and no node count: an edge list has V <= 2E, so E alone
-# bounds the kernel's work.
+# ``_graph_kernel`` counts the edge table it is handed and, at or below
+# this many edges, collects it to the driver and runs the whole iteration
+# there in numpy; above it the caller takes its distributed loop.  One
+# count and no node count: an edge list has V <= 2E, so E alone bounds
+# the kernel's work and what it holds in the driver.
 #
-# Kernel vs loop, seconds to build + run (noop write), two samples each,
-# local[4] on 4 cores; random graphs with xxhash64 endpoints, edge table
-# checkpointed before timing; CC is ``dedup._cc_star_labels``:
+# Kernel vs loop, seconds to build + run (noop write), local[4] on 4
+# cores; random graphs with xxhash64 endpoints, edge table checkpointed
+# before timing, each algorithm warmed once per graph; two kernel
+# samples, one loop sample; CC is ``dedup._cc_star_labels``:
 #
-#   edges / nodes  pagerank            label propagation   CC
-#                  kernel    loop      kernel    loop      kernel    loop
-#   10k / 6.6k     0.96-1.05 4.7-5.8   0.51-0.52 2.3-3.0   0.47-0.58 5.2-5.5
-#   100k / 66k     1.12-1.16 4.7-5.1   0.63-0.71 4.1-4.2   0.70-0.77 8.1-8.6
-#   300k / 198k    1.71-1.90 7.4-8.7   1.31-1.71 7.1-8.3   1.41      12.4-13.7
-#   1M / 660k      3.64-4.14 16.2-16.6 4.87-4.97 17.0-17.5 3.29-3.56 28.3-32.5
-#   1M / 65.5k     2.57-2.58 8.2-9.3   3.55-3.58 11.9-14.6 2.39-2.77 8.7-10.6
+#   edges / nodes  pagerank          label propagation  CC
+#                  kernel    loop    kernel    loop     kernel    loop
+#   10k / 6.6k     0.65-0.87  4.83   0.25-0.26  2.24    0.28-0.33  5.26
+#   100k / 66k     0.63-0.81  4.58   0.53-0.59  4.05    0.51-0.56  7.48
+#   300k / 198k    1.36-1.86  6.13   1.41-1.45  6.60    1.13-1.31 11.09
+#   1M / 660k      5.78-6.04 16.71   4.83-5.07 16.85    4.32-4.74 26.65
 #
-# The kernel wins at every measured size (3.2-10x), so the cap is not a
-# crossover: it bounds what one task holds (the whole edge list, as Arrow
-# and then numpy, in one Python worker).
+# Cost law: one count job, one Arrow collect of E rows, O(iters x (V+E))
+# numpy work, then a V-row local relation built in the driver and scanned
+# by the caller's plan; time grows about linearly in E above 100k.  The
+# driver's Python peak RSS was 145 MB at 10k edges and 359 MB at 1M
+# (about 0.2 KB per edge: the Arrow edge list, its numpy copies and a
+# result of up to 2E rows).  The kernel wins at every measured size
+# (2.8-16x), so the cap is not a crossover: it is the largest measured
+# size, and it bounds the driver memory above.
 _KERNEL_MAX_EDGES = 1_000_000
 
 
@@ -179,46 +183,43 @@ _KERNELS = {
 }
 
 
-def _kernel_frame(pdf: pd.DataFrame, algo: str, params: dict) -> pd.DataFrame:
-    """The kernel body on one pandas frame of (src, dst[, weight]) rows:
+def _kernel_frame(edges: pa.Table, algo: str, params: dict) -> pa.Table:
+    """The kernel body on one Arrow table of (src, dst[, weight]) rows:
     index the endpoints in node order, run ``algo``, map back to nodes."""
     fn, cols = _KERNELS[algo]
-    m = len(pdf)
+    m = edges.num_rows
     nodes, idx = np.unique(
-        np.concatenate([pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()]),
+        np.concatenate([edges.column(0).to_numpy(), edges.column(1).to_numpy()]),
         return_inverse=True,
     )
-    w = pdf.iloc[:, 2].to_numpy() if pdf.shape[1] > 2 else None
+    w = edges.column(2).to_numpy() if edges.num_columns > 2 else None
     out = fn(idx[:m], idx[m:], w, len(nodes), **params)
     if "{node}" in cols:
         out = {c: nodes[v] for c, v in out.items()}
-    return pd.DataFrame({"node": nodes, **out})
-
-
-# the kernel ships to the Python worker by value: the worker needs numpy
-# and pandas, not this package on its path
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    return pa.table({"node": nodes, **out})
 
 
 def _graph_kernel(edges: DataFrame, algo: str, **params) -> DataFrame | None:
-    """Run one small-graph algorithm in a single Python task, or return
-    None when ``edges`` holds more than ``_KERNEL_MAX_EDGES`` rows (the
-    caller then runs its loop).  The gate's count is the one job fired
-    here, so pass a checkpointed frame the loop can reuse.  ``edges``
-    holds (src, dst[, weight]) as its columns, in that order; the node
-    set is every endpoint.  Returns (node, <algorithm columns>), one row
-    per node, unrounded; an empty edge list returns no rows."""
-    if edges.count() > _KERNEL_MAX_EDGES:
+    """Run one small-graph algorithm in the driver, or return None when
+    ``edges`` holds more than ``_KERNEL_MAX_EDGES`` rows (the caller then
+    runs its loop).  Two jobs at most: the gate's count, then one Arrow
+    collect of the edge list (``toArrow``) below the cap, none for an
+    empty one; so pass a checkpointed frame that the loop can reuse and
+    the collect re-reads.  Counting first keeps a graph above the cap
+    out of the driver.  ``edges`` holds (src, dst[, weight]) as its
+    columns, in that order; the node set is every endpoint.  Returns
+    (node, <algorithm columns>), one row per node, unrounded, as a local
+    relation: later operators read it in the JVM and start no Python
+    worker.  An empty edge list returns no rows."""
+    m = edges.count()
+    if m > _KERNEL_MAX_EDGES:
         return None
     s, d = edges.columns[:2]
     node_t = edges.select(s).unionAll(edges.select(d)).schema[0].dataType.simpleString()
     schema = f"node {node_t}, " + _KERNELS[algo][1].format(node=node_t)
-    # one constant group (a string: an integer literal reads as ordinal)
-    # over one partition, which needs no exchange: the count above has
-    # already materialized a checkpointed input
-    return edges.coalesce(1).groupBy(F.lit("g")).applyInPandas(
-        lambda pdf: _kernel_frame(pdf, algo, params), schema
-    )
+    # an empty graph has no node to run on: no collect
+    out = _kernel_frame(edges.toArrow(), algo, params) if m else []
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def pagerank(

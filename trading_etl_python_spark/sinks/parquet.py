@@ -127,7 +127,11 @@ def upsert_ignore(
             cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
             if any(t is None for t in touched):
                 cond = cond | F.col(partition_col).isNull()
-            existing_keys = spark.read.parquet(path).filter(cond).select(
+            # read with the batch's own key + partition schema: no schema
+            # inference job, and a table created empty (only _SUCCESS)
+            # reads as no rows instead of failing to infer one
+            ks = incoming.select(*keys, partition_col).schema
+            existing_keys = spark.read.schema(ks).parquet(path).filter(cond).select(
                 *[F.col(k).alias(f"_ex_{k}") for k in keys]
             )
             # null-safe key equality: a NULL-keyed row already in the table

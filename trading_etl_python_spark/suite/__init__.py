@@ -70,12 +70,15 @@ def _last_cert(repo: Path) -> dict[str, int]:
 # builder or oracle.  Add an entry when either changes; it stops leading
 # by itself once that round's CORRECTNESS file certifies it.
 _TOUCHED: dict[str, int] = {
-    # the small-graph HOF folds became one numpy kernel (operators/graph.py)
+    # the small-graph HOF folds became one numpy kernel, run in the driver
+    # (operators/graph.py)
     **dict.fromkeys((
         "q_pagerank", "q_hits", "q_communities", "q_communities_minhash",
         "q_kcore", "q_kcore_minhash", "q_textrank", "q_dedup_clusters",
         "q_dup_weights", "q_corpus_full",
     ), 15),
+    # sinks.upsert_ignore reads the existing keys with the batch's schema
+    **dict.fromkeys(("q_backfill_job", "q_backfill_incremental"), 15),
     # stream_state_partitions defaults to min(8, defaultParallelism), and
     # run_replay_pipeline (q_stream_replay) now starts its query under it
     **dict.fromkeys((

@@ -41,16 +41,18 @@ def spread(df: DataFrame, *cols: str, factor: int | None = None) -> DataFrame:
     task-scheduling overhead on small inputs; measured on q_dedup_ngram
     sf0.1: full-width 1.68s vs x16 cap 1.35s median, no-spread 5.2s.
 
-    Driver cost (r10): the width probe runs full physical planning
-    (~105 ms measured on a parquet-scan projection), so it is skipped
-    where the target doesn't depend on it (keyed, no factor -> t = n)
-    and memoized by ``semanticHash`` (analysis-only, ~7 ms) elsewhere.
+    Driver cost: the width probe, ``df.rdd.getNumPartitions()``, plans
+    ``df`` physically and, under AQE, runs every shuffle stage below it
+    as Spark jobs, so it is skipped where the target doesn't depend on
+    it (keyed with no factor, or with ``n <= factor``:
+    ``min(n, max(1, cur) * factor) == n`` for any ``cur``) and memoized
+    by ``semanticHash`` (analysis-only, ~7 ms) elsewhere.
     Keyed spread still always inserts the exchange: every call site
     feeds a mapInPandas kernel that RELIES on whole-key co-location,
     and detecting an already-matching child distribution would cost the
     same physical-planning pass the memo exists to avoid."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions") or "200")
-    if cols and not factor:
+    if cols and (not factor or n <= factor):
         return df.repartition(n, *cols)
     cur = _num_partitions(df)
     if cols:
