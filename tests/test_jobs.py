@@ -278,3 +278,19 @@ def test_reads_refuse_a_table_with_no_data_files(spark, tmp_path):
     with pytest.raises(ValueError, match="no data files") as sliced:
         range_query_job(spark, path, "2024-01-01", "2024-01-31")
     assert path in str(latest.value) and path in str(sliced.value)
+
+
+def test_backfill_builders_on_empty_tables_return_no_rows(spark, sf_dir, tmp_path):
+    """With every table empty no row reaches the sink, so upsert_ignore
+    writes no table; both backfill builders must then return the
+    oracle's 0 rows instead of failing to read the absent sink."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from trading_etl_python_spark.suite import extensions as X
+
+    for src in glob.glob(os.path.join(sf_dir, "*.parquet")):
+        pq.write_table(pq.read_schema(src).empty_table(), str(tmp_path / os.path.basename(src)))
+    for build in (X.q_backfill_job, X.q_backfill_incremental):
+        assert build(spark, str(tmp_path)).count() == 0

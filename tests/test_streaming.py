@@ -132,30 +132,6 @@ def test_replay_ema_matches_batch(spark, sf_dir, replay):
         )
 
 
-class _FakeValueState:
-    """In-process stand-in for a transformWithState ValueState handle."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self):
-        self._states = {}
-
-    def getValueState(self, name, schema):
-        return self._states.setdefault(name, _FakeValueState())
-
-
 class _FakeGroupState:
     """In-process stand-in for applyInPandasWithState's GroupState."""
 
@@ -174,126 +150,54 @@ class _FakeGroupState:
         self._v = v
 
 
-def test_transform_with_state_matches_group_state(spark, sf_dir, replay):
-    """The transformWithStateInPandas path must emit exactly the rows the
-    applyInPandasWithState path emits.
-
-    Two modes so the parity claim is always exercised (never skipped):
-    with ``protobuf`` available the full engine runtime runs (Spark's
-    transformWithState Python worker imports it at stream start); without
-    it, the ``_IndicatorProcessor`` is driven IN-PROCESS against fake
-    state handles, batch-for-batch against ``_stateful_fn`` — the two
-    paths share the buffer/indicator kernels, so this checks the state
-    plumbing that differs (init/exists/get/update/trim) on the identical
-    micro-batch schedule the engine would deliver per key."""
-    import importlib.util
-
+def test_stateful_fn_gates_carries_and_trims_buffer():
+    """``_stateful_fn`` driven in-process against a fake GroupState, on
+    the schedule the engine delivers per key: three 30-tick micro-batches
+    for each of two symbols.  Only gated rows come out (>= WARMUP rows of
+    history and a non-NULL sma_20), the buffer carries across batches
+    (batch 2's first rows are gated on batch 1's history, and every SMA
+    equals the full-history rolling mean), and the state is trimmed to
+    the last LOOKBACK ticks."""
+    import numpy as np
     import pandas as pd
 
     from trading_etl_python_spark.streaming import pipeline as P
 
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent entirely
-        has_protobuf = False
-    if has_protobuf:
-        with tempfile.TemporaryDirectory(prefix="ckpt_tws_") as ckpt:
-            tws = run_replay_pipeline(
-                spark, sf_dir, ckpt, out_table="stream_out_tws", api="transformWithState"
-            )
-            cols = ["symbol", "event_id", "close", "sma_20", "ema_20", "rsi_14"]
-            assert tws.count() == replay.count()
-            assert tws.select(*cols).exceptAll(replay.select(*cols)).count() == 0
-        return
-
-    # --- in-process drive: 3 micro-batches x 2 symbols, 30 ticks each ---
-    def batches_for(sym: int):
-        rows = [
+    n = 90
+    for sym in (1, 2):
+        ticks = pd.DataFrame(
             {
                 "symbol": sym,
-                "time": pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=i),
-                "event_id": 1000 * sym + i,
-                "close": 100.0 + ((i * 7 + sym * 3) % 13) - 6.0,
+                "time": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n), unit="s"),
+                "event_id": 1000 * sym + np.arange(n),
+                "close": [100.0 + ((i * 7 + sym * 3) % 13) - 6.0 for i in range(n)],
             }
-            for i in range(90)
-        ]
-        df = pd.DataFrame(rows)
-        return [df.iloc[:30].copy(), df.iloc[30:60].copy(), df.iloc[60:].copy()]
-
-    for sym in (1, 2):
-        proc = P._IndicatorProcessor()
-        proc.init(_FakeHandle())
+        )
+        sma = ticks["close"].rolling(20).mean().round(4)
         gstate = _FakeGroupState()
-        for batch in batches_for(sym):
-            via_tws = list(proc.handleInputRows((sym,), iter([batch]), None))
-            via_gs = [
-                out
-                for out in P._stateful_fn((sym,), iter([batch]), gstate)
-                if len(out)
-            ]
-            assert len(via_tws) == len(via_gs)
-            for a, b in zip(via_tws, via_gs):
-                pd.testing.assert_frame_equal(
-                    a.reset_index(drop=True), b.reset_index(drop=True)
-                )
-        # both paths must have trimmed state to the same LOOKBACK tail
-        tws_buf = proc._buf.get()
-        gs_buf = gstate.get
-        assert tws_buf == gs_buf
-        assert len(tws_buf[0]) == P.LOOKBACK
+        emitted = []
+        for lo in (0, 30, 60):
+            batch = ticks.iloc[lo : lo + 30].copy()
+            outs = list(P._stateful_fn((sym,), iter([batch]), gstate))
+            assert len(outs) == 1
+            emitted.append(outs[0])
+            # the buffer carries: the state holds every tick so far, up to LOOKBACK
+            assert gstate.get[1] == list(ticks["event_id"][: lo + 30][-P.LOOKBACK :])
 
-
-def test_mg_processor_matches_group_state_path():
-    """The transformWithState Misra-Gries twin must track the GroupState
-    path batch-for-batch: same emitted candidate sets, same counter
-    state.  Driven in-process against fake handles (the two paths share
-    the _mg_advance kernel; this checks the state plumbing)."""
-    import pandas as pd
-
-    from trading_etl_python_spark.streaming import pipeline as P
-
-    batches = [
-        pd.DataFrame({"text": ["alpha beta alpha", "beta gamma"]}),
-        pd.DataFrame({"text": ["alpha delta epsilon zeta", None]}),
-        pd.DataFrame({"text": ["beta beta alpha", "eta theta iota kappa"]}),
-    ]
-    proc = P._MGProcessor(capacity=3)
-    proc.init(_FakeHandle())
-    gstate = _FakeGroupState()
-
-    def gs_step(batch):
-        counters = dict(zip(*gstate.get)) if gstate.exists else {}
-        P._mg_advance(counters, iter([batch]), 3)
-        gstate.update((list(counters), [int(v) for v in counters.values()]))
-        return set(counters)
-
-    for batch in batches:
-        via_tws = list(proc.handleInputRows((0,), iter([batch]), None))
-        assert len(via_tws) == 1
-        assert set(via_tws[0]["token"]) == gs_step(batch)
-    toks, cnts = proc._mg.get()
-    gtoks, gcnts = gstate.get
-    assert dict(zip(toks, cnts)) == dict(zip(gtoks, gcnts))
-    assert len(toks) <= 3  # capacity bound held across batches
-
-
-def test_replay_pipeline_auto_api_resolves_to_runnable_path(spark, sf_dir):
-    """api='auto' (the default) must pick transformWithState exactly
-    when the runtime can actually execute it, and the pipeline must run
-    green either way."""
-    from trading_etl_python_spark.streaming import pipeline as P
-
-    with tempfile.TemporaryDirectory(prefix="ckpt_auto_") as ckpt:
-        res = P.run_replay_pipeline(spark, sf_dir, ckpt, out_table="stream_out_auto")
-        assert res.count() > 0
-    # the resolver itself: with protobuf absent it must report False
-    import importlib.util
-
-    try:
-        has_pb = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_pb = False
-    assert P.tws_runtime_available() == has_pb
+        idx = [np.asarray(out["event_id"] - 1000 * sym) for out in emitted]
+        # batch 1 starts from an empty buffer: only rows with WARMUP rows of history
+        assert list(idx[0]) == list(range(P.WARMUP - 1, 30))
+        # batches 2 and 3 extend the carried buffer, so all their rows pass the gate
+        assert list(idx[1]) == list(range(30, 60))
+        assert list(idx[2]) == list(range(60, 90))
+        for out, i in zip(emitted, idx):
+            assert out["sma_20"].notna().all()
+            assert (i + 1 >= P.WARMUP).all()
+            np.testing.assert_allclose(out["sma_20"], sma.iloc[i], rtol=0, atol=1e-9)
+        # trimmed to the LOOKBACK tail after batch 3 (90 ticks seen)
+        times, eids, closes = gstate.get
+        assert len(times) == len(eids) == len(closes) == P.LOOKBACK
+        assert eids == list(ticks["event_id"][n - P.LOOKBACK :])
 
 
 def test_stream_candles_match_batch(spark, sf_dir):
@@ -984,6 +888,11 @@ def test_stream_heavy_hitters_restart_recovers_mg_state(spark, tmp_path):
     # run 2 appended exactly one batch of emissions, never re-emitting
     # run 1's batch
     assert n_rows_after_a > 0 and len(all_rows) > n_rows_after_a
+    # the MG capacity bound holds in every batch: batch A alone brings 21
+    # distinct tokens, and neither batch emits more than capacity=16 for
+    # its single group
+    assert {r["grp"] for r in all_rows} == {0}
+    assert n_rows_after_a <= 16 and len(all_rows) - n_rows_after_a <= 16
     # each batch emits every surviving counter once, so 'zebra' (800
     # occurrences, all in batch A) appears in BOTH batches' emissions
     # iff the MG counters were recovered from the checkpoint — a state
@@ -999,8 +908,8 @@ def test_stream_heavy_hitters_restart_recovers_mg_state(spark, tmp_path):
 
 def test_stream_state_partitions_default_is_one_wave_of_slots(spark):
     """The state partition count defaults to min(8, defaultParallelism):
-    4 at local[4], 8 at local[8] and above; an explicit n wins; the
-    session's width comes back afterwards.  The local[4] and local[32]
+    4 at local[4], 8 at local[8] and above; the session's width comes
+    back afterwards.  The local[4] and local[32]
     cases use a stand-in session (one JVM per test process)."""
     from types import SimpleNamespace
 
@@ -1018,13 +927,9 @@ def test_stream_state_partitions_default_is_one_wave_of_slots(spark):
         fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=slots), conf=Conf({key: "32"}))
         with stream_state_partitions(fake):
             assert fake.conf[key] == want
-        with stream_state_partitions(fake, 3):
-            assert fake.conf[key] == "3"
         assert fake.conf[key] == "32"
 
     before = spark.conf.get(key)
     with stream_state_partitions(spark):
         assert spark.conf.get(key) == str(min(8, spark.sparkContext.defaultParallelism))
-    with stream_state_partitions(spark, 5):
-        assert spark.conf.get(key) == "5"
     assert spark.conf.get(key) == before

@@ -23,18 +23,23 @@ engine logic.
 Scale: state per key is a bounded 60-row float buffer (the reference's
 own cap), so total state = O(#symbols * 60) regardless of stream length;
 shuffle is one hash exchange on symbol per micro-batch.
+
+Every keyed-state operator here runs on ``applyInPandasWithState``, the
+one stateful runtime.  The state store behind it is picked by the
+session's state store provider conf, so off-heap state needs no second
+operator API.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StatefulProcessor
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import recursive as R
@@ -44,7 +49,8 @@ LOOKBACK = 60  # consumer.py:33
 WARMUP = 26  # consumer.py:165
 
 
-def stream_state_partitions(spark: SparkSession, n: int | str | None = None):
+@contextmanager
+def stream_state_partitions(spark: SparkSession):
     """Pin ``spark.sql.shuffle.partitions`` for the duration of ONE
     eagerly-executed streaming run, restoring it afterwards.
 
@@ -61,12 +67,12 @@ def stream_state_partitions(spark: SparkSession, n: int | str | None = None):
     per-partition cost c (store load, delta file, commit) on top of its
     share of the batch's r rows at w per row, so the state stage takes
     about ``ceil(P / S) * c + w * r / min(P, S)``: below S a slot idles,
-    above S each extra partition adds c / S and no parallelism.  Default ``P = min(8, S)``: one wave of state tasks,
-    capped at the 8 that r13 measured against 32 (the stream-stream
-    join's sf0.1 replay ran 2.2x faster at 8).  On 4 cores, perfbench's
-    tick stream (200 symbols, 5k ticks a trigger) at 4 partitions
-    against 8 cut the steady trigger p50 from about 2.9 to 2.3 s and the
-    state commit from 773 to 271 ms.  An explicit ``n`` wins.
+    above S each extra partition adds c / S and no parallelism.  So it
+    pins ``P = min(8, S)``: one wave of state tasks, capped at 8 (the
+    stream-stream join's sf0.1 replay ran 2.2x faster at 8 than at 32).
+    On 4 cores, perfbench's tick stream (200 symbols, 5k ticks a
+    trigger) at 4 partitions against 8 cut the steady trigger p50 from
+    about 2.9 to 2.3 s and the state commit from 773 to 271 ms.
     The value is pinned per checkpoint, so a restart keeps the count the
     stream started with.
 
@@ -74,23 +80,16 @@ def stream_state_partitions(spark: SparkSession, n: int | str | None = None):
     hash(key)-deterministic and every streaming operator here is
     per-key.
     """
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        key = "spark.sql.shuffle.partitions"
-        val = str(n or min(8, spark.sparkContext.defaultParallelism))
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, val)
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return _cm()
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(min(8, spark.sparkContext.defaultParallelism)))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 TICK_SCHEMA = T.StructType(
@@ -226,49 +225,6 @@ def stream_indicators(ticks: DataFrame) -> DataFrame:
     )
 
 
-class _IndicatorProcessor(StatefulProcessor):
-    """StatefulProcessor for ``transformWithStateInPandas`` — Spark 4's
-    typed-state API (the engine-managed successor to GroupState): state
-    lives in the RocksDB state store as a named ValueState, so per-key
-    buffers spill to disk and snapshot into the checkpoint instead of
-    living on the JVM heap.  Same tick buffer + gate semantics as
-    ``_stateful_fn`` (consumer.py:35-39,162-173)."""
-
-    def init(self, handle) -> None:
-        self._buf = handle.getValueState("buf", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (sym,) = key
-        prev = self._buf.get() if self._buf.exists() else None
-        buf = (list(prev[0]), list(prev[1]), list(prev[2])) if prev else ([], [], [])
-        (times, eids, closes), n_new = _advance_buffer(buf, rows)
-        if n_new:
-            yield _indicators_from_buffer(
-                sym, np.array(times), np.array(eids), np.array(closes, dtype=np.float64), n_new
-            )
-            self._buf.update((times[-LOOKBACK:], eids[-LOOKBACK:], closes[-LOOKBACK:]))
-
-    def close(self) -> None:
-        pass
-
-
-def stream_indicators_tws(ticks: DataFrame) -> DataFrame:
-    """``stream_indicators`` on the transformWithStateInPandas runtime.
-    Requires the RocksDB state store provider (set by the runner); output
-    rows are identical to the applyInPandasWithState path.
-
-    Runtime note: Spark's transformWithState Python driver worker needs
-    the ``protobuf`` package at stream start; environments without it
-    (like this repo's test container) should use ``stream_indicators``
-    — the parity test skips itself accordingly."""
-    return ticks.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=_IndicatorProcessor(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def stream_windowed_stats(
     ticks: DataFrame, window: str = "1 hour", watermark: str = "30 minutes"
 ) -> DataFrame:
@@ -300,9 +256,10 @@ def stream_windowed_stats(
     )
 
 
-def events_file_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataFrame:
-    """Replay the events parquet as a micro-batched file stream (the
-    offline stand-in for the Kafka source, per SURVEY.md §3.3).
+def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Replay the events parquet as a micro-batched file stream, one file
+    a trigger (the offline stand-in for the Kafka source, per SURVEY.md
+    §3.3).
 
     The file's physical ``ts`` encoding has varied across testdata
     generations (TIMESTAMP(NANOS) read as long via nanosAsLong vs native
@@ -316,7 +273,7 @@ def events_file_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> 
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")  # file source needs a dir
         .parquet(sf_dir)
     )
@@ -338,51 +295,26 @@ def events_file_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> 
     raise ValueError(f"unsupported ts physical type {ts_kind!r} in {sf_dir}/events.parquet")
 
 
-def tws_runtime_available() -> bool:
-    """Whether ``transformWithStateInPandas`` can actually run here:
-    Spark's transformWithState Python worker imports ``protobuf`` at
-    stream start (a runtime dependency, not an analysis-time one), so
-    without it the query dies mid-stream.  The ``api='auto'`` paths
-    probe this and fall back to ``applyInPandasWithState``."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent
-        return False
-
-
 def run_replay_pipeline(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
-    out_table: str = "stream_out",
     sink_path: str | None = None,
-    api: str = "auto",
 ) -> DataFrame:
     """End-to-end availableNow replay: file source -> tick projection ->
-    stateful indicators -> foreachBatch idempotent dedup-append into an
-    in-memory table.  Returns the collected batch result as a DataFrame.
+    ``stream_indicators`` (keyed state on ``applyInPandasWithState``) ->
+    foreachBatch idempotent dedup-append into a parquet sink.  Returns
+    the sink read back as a DataFrame (empty, with ``OUT_SCHEMA``, when no
+    row passed the warmup gate).
 
     The foreachBatch sink is ``sinks.upsert_ignore`` — the reference's
     at-least-once + ON CONFLICT DO NOTHING path (T4): replayed batches
     anti-join against the already-written (time, symbol) keys, so
     re-delivery never double-inserts, across batches and across restarts.
-
-    ``api``: 'auto' (default) runs Spark 4's typed-state
-    ``transformWithStateInPandas`` whenever the runtime supports it
-    (``tws_runtime_available``) and falls back to
-    ``applyInPandasWithState`` otherwise; either name forces that path."""
+    The sink defaults to ``<checkpoint_dir>/sink``."""
     import os
 
     from ..sinks import upsert_ignore
-
-    if api == "auto":
-        api = (
-            "transformWithState"
-            if tws_runtime_available()
-            else "applyInPandasWithState"
-        )
 
     ev = events_file_stream(spark, sf_dir)
     ticks = ev.select(
@@ -391,18 +323,7 @@ def run_replay_pipeline(
         "event_id",
         F.col("value").alias("close"),
     ).filter(F.col("close").isNotNull() & F.col("time").isNotNull())
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if api == "transformWithState":
-        # transformWithState requires the RocksDB state store (read at
-        # query start; restored after the run below)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        out = stream_indicators_tws(ticks)
-    else:
-        out = stream_indicators(ticks)
+    out = stream_indicators(ticks)
 
     # the sink must live WITH the checkpoint: a restart that reuses the
     # checkpoint (source already consumed) must also see the rows it wrote
@@ -411,27 +332,17 @@ def run_replay_pipeline(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_ignore(batch_df, sink_path, keys=("time", "symbol"))
 
-    try:
-        with stream_state_partitions(spark):
-            q = (
-                out.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if api == "transformWithState":
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
+    with stream_state_partitions(spark):
+        q = (
+            out.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     if not os.path.isdir(sink_path):  # stream produced no gated rows at all
-        res = spark.createDataFrame([], OUT_SCHEMA)
-    else:
-        res = spark.read.parquet(sink_path).drop("trade_date")
-    res.createOrReplaceTempView(out_table)
-    return res
+        return spark.createDataFrame([], OUT_SCHEMA)
+    return spark.read.parquet(sink_path).drop("trade_date")
 
 
 def stream_candles(
@@ -540,12 +451,13 @@ def stream_session_windows(
     )
 
 
-def documents_file_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataFrame:
-    """Replay the documents parquet as a micro-batched file stream."""
+def documents_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Replay the documents parquet as a micro-batched file stream, one
+    file a trigger."""
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
@@ -566,13 +478,24 @@ def stream_heavy_hitter_candidates(
     shards), so a batch-side exact re-verify of the union returns
     exactly the true heavy hitters — parity-tested against
     operators/sketches.heavy_hitters."""
+    import re
+
+    from ..operators.dedup import TOKEN_RE
+    from ..operators.sketches import _mg_update
+
+    pat = re.compile(TOKEN_RE)
+
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             toks, cnts = state.get
             counters = dict(zip(toks, cnts))
         else:
             counters = {}
-        _mg_advance(counters, pdfs, capacity)
+        # tokenize each document and fold it into the capacity-bounded counters
+        for pdf in pdfs:
+            for text in pdf["text"]:
+                if text:
+                    _mg_update(counters, [t for t in pat.split(text.lower()) if t], capacity)
         state.update((list(counters.keys()), [int(v) for v in counters.values()]))
         yield pd.DataFrame({"grp": [key[0]] * len(counters), "token": list(counters)})
 
@@ -585,73 +508,6 @@ def stream_heavy_hitter_candidates(
             stateStructType="tokens array<string>, counts array<long>",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _mg_advance(counters: dict, pdfs: Iterator[pd.DataFrame], capacity: int) -> None:
-    """Shared micro-batch kernel of the two streaming MG paths: tokenize
-    each document and fold it into the capacity-bounded counter dict."""
-    import re
-
-    from ..operators.dedup import TOKEN_RE
-    from ..operators.sketches import _mg_update
-
-    pat = re.compile(TOKEN_RE)
-    for pdf in pdfs:
-        for text in pdf["text"]:
-            if text:
-                _mg_update(
-                    counters, [t for t in pat.split(text.lower()) if t], capacity
-                )
-
-
-class _MGProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` twin of the streaming Misra-Gries
-    sketch — the same counter state as ``stream_heavy_hitter_candidates``
-    held in an engine-managed ValueState (RocksDB-backed, checkpoint-
-    snapshotted) instead of a GroupState tuple.  Emission contract and
-    exactness guarantee are identical; parity is test-pinned batch-for-
-    batch against the GroupState path."""
-
-    def __init__(self, capacity: int = 64):
-        self._capacity = capacity
-
-    def init(self, handle) -> None:
-        self._mg = handle.getValueState(
-            "mg", "tokens array<string>, counts array<long>"
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        prev = self._mg.get() if self._mg.exists() else None
-        counters = dict(zip(prev[0], prev[1])) if prev else {}
-        _mg_advance(counters, rows, self._capacity)
-        self._mg.update(
-            (list(counters.keys()), [int(v) for v in counters.values()])
-        )
-        yield pd.DataFrame(
-            {"grp": [key[0]] * len(counters), "token": list(counters)}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_heavy_hitter_candidates_tws(
-    docs: DataFrame, capacity: int = 64, n_groups: int = 8
-) -> DataFrame:
-    """``stream_heavy_hitter_candidates`` on the
-    transformWithStateInPandas runtime (requires the RocksDB state
-    store provider and the ``protobuf`` runtime dependency —
-    ``tws_runtime_available``)."""
-    return (
-        docs.withColumn("grp", F.pmod("doc_id", n_groups).cast("int"))
-        .groupBy("grp")
-        .transformWithStateInPandas(
-            statefulProcessor=_MGProcessor(capacity),
-            outputStructType="grp int, token string",
-            outputMode="append",
-            timeMode="none",
         )
     )
 

@@ -77,7 +77,8 @@ _TOUCHED: dict[str, int] = {
         "q_kcore", "q_kcore_minhash", "q_textrank", "q_dedup_clusters",
         "q_dup_weights", "q_corpus_full",
     ), 15),
-    # sinks.upsert_ignore reads the existing keys with the batch's schema
+    # sinks.upsert_ignore reads the existing keys with the batch's schema,
+    # and a sink that no row reached reads as an empty table
     **dict.fromkeys(("q_backfill_job", "q_backfill_incremental"), 15),
     # stream_state_partitions defaults to min(8, defaultParallelism), and
     # run_replay_pipeline (q_stream_replay) now starts its query under it

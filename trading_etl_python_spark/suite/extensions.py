@@ -3937,7 +3937,11 @@ def q_backfill_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(_sink_root(), f"backfill_{next(_SINK_SEQ)}")
     jobs.backfill_job(spark, sf_dir, path, warmup=26)
     rerun = jobs.backfill_job(spark, sf_dir, path, warmup=26)
-    tbl = spark.read.parquet(path)
+    if os.path.isdir(path):
+        tbl = spark.read.parquet(path)
+    else:  # no row passed the gate, so upsert_ignore wrote no table
+        schema = jobs.indicator_table(jobs.bars(spark, sf_dir), warmup=26).schema
+        tbl = spark.createDataFrame([], schema)
     return (
         tbl.groupBy("symbol")
         .agg(
@@ -4001,7 +4005,11 @@ def q_backfill_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert_ignore(pre, path, keys=("time", "symbol"))
     jobs.incremental_backfill_job(spark, sf_dir, path, since=cut)
     rerun = jobs.incremental_backfill_job(spark, sf_dir, path, since=cut)
-    out = spark.read.parquet(path).filter(F.col("time") >= F.lit(cut))
+    if os.path.isdir(path):
+        out = spark.read.parquet(path)
+    else:  # no row reached the sink, so upsert_ignore wrote no table
+        out = spark.createDataFrame([], pre.schema)
+    out = out.filter(F.col("time") >= F.lit(cut))
     return out.select("symbol", "time", "sma_20", "stoch_k_14").withColumn(
         "rows_rerun", F.lit(rerun).cast("long")
     )
