@@ -373,29 +373,6 @@ def test_minhash_ml_verified_semi_join_broadcasts(spark, sf_dir):
     assert m is not None, "candidate-id semi join is not broadcast"
 
 
-def test_chunked_carry_never_collects_state(spark, sf_dir):
-    """The chunked-recurrence carry rides a broadcast-joined DataFrame
-    (r3 VERDICT #5) — the ONLY driver collect in the module is the
-    chunk-boundary percentile (num_chunks-1 scalars); no `_state` rows
-    ever reach the driver."""
-    import inspect
-
-    from trading_etl_python_spark.operators import recursive_chunked as RC
-
-    src = inspect.getsource(RC.recursive_suite_chunked)
-    collects = [ln.strip() for ln in src.splitlines() if ".collect()" in ln]
-    assert collects == [').collect()[0]["p"]'], collects
-    assert "broadcast(carry)" in src and "_prev_state" in src
-    # and the carry join is genuinely exercised end-to-end (deterministic
-    # subset — the chunk loop re-evaluates its input, so limit() would
-    # pick different rows per chunk)
-    from pyspark.sql import functions as F
-
-    b = bars(spark, sf_dir).filter(F.col("event_id") < 4000)
-    n_in = b.count()
-    assert RC.recursive_suite_chunked(b, num_chunks=3).count() == n_in
-
-
 def test_upsert_replace_one_file_per_partition(spark, tmp_path):
     """The pre-write repartition must land each date partition as ONE
     file — the guard against the tasks x dates small-file explosion."""

@@ -275,24 +275,6 @@ def test_winsorize_bounds_and_identity_inside(spark, closes):
 
 
 @given(
-    sig=st.integers(min_value=0, max_value=(1 << 12) - 1),
-    radius=st.integers(min_value=0, max_value=3),
-)
-@settings(max_examples=50, deadline=None)
-def test_hamming_ball_size_and_membership(sig, radius):
-    """The multi-probe set is exactly the Hamming ball: Σ C(n, r)
-    distinct members, every member within radius, sig itself included."""
-    from trading_etl_python_spark.operators.similarity import _hamming_ball
-
-    ball = _hamming_ball(sig, 12, radius)
-    expected = sum(math.comb(12, r) for r in range(radius + 1))
-    assert len(ball) == len(set(ball)) == expected
-    assert sig in ball
-    assert all(bin(sig ^ m).count("1") <= radius for m in ball)
-    assert all(0 <= m < (1 << 12) for m in ball)
-
-
-@given(
     table=st.text(alphabet="abc_", min_size=1, max_size=8),
     cols=st.lists(
         st.text(alphabet="xyz_", min_size=1, max_size=6), min_size=1, max_size=5, unique=True
@@ -313,54 +295,6 @@ def test_insert_ignore_sql_all_dialects_wellformed(table, cols, nkeys):
         assert f"{qc}{stage}{qc}" in sql and f"{qc}{table}{qc}" in sql
         for c in cols:
             assert f"{qc}{c}{qc}" in sql
-
-
-@given(
-    xs=st.lists(
-        st.floats(min_value=1.0, max_value=500.0, allow_nan=False, width=32),
-        min_size=2,
-        max_size=120,
-    ),
-    data=st.data(),
-)
-@settings(max_examples=60, deadline=None)
-def test_chunked_kernels_match_sequential(xs, data):
-    """Warmup-carry chunk kernels == sequential kernels for ANY series
-    and ANY split points (pure numpy, no Spark) — the invariant the
-    distributed chunked operator is built on."""
-    from trading_etl_python_spark.operators import recursive as R
-    from trading_etl_python_spark.operators import recursive_chunked as RC
-
-    c = np.array(xs, dtype=np.float64)
-    h, lo = c + 1.0, c - 1.0
-    n_cuts = data.draw(st.integers(min_value=0, max_value=4))
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(min_value=1, max_value=len(c) - 1),
-                min_size=n_cuts,
-                max_size=n_cuts,
-            )
-        )
-    )
-    bounds = [0, *cuts, len(c)]
-
-    st_vec = RC.fresh_state()
-    got = {k: [] for k in ("ema_10", "rsi", "atr", "adx")}
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        got["ema_10"].append(RC._ema_chunk(c[a:b], st_vec, RC._EMA0, 10))
-        got["rsi"].append(RC._rsi_chunk(c[a:b], st_vec))
-        got["atr"].append(RC._atr_chunk(h[a:b], lo[a:b], c[a:b], st_vec))
-        got["adx"].append(RC._adx_chunk(h[a:b], lo[a:b], c[a:b], st_vec))
-    exp = {
-        "ema_10": R.ema_rec(c, 10),
-        "rsi": R.rsi_rec(c, 14),
-        "atr": R.atr_rec(h, lo, c, 14),
-        "adx": R.adx_rec(h, lo, c, 14),
-    }
-    for k, chunks in got.items():
-        joined = np.concatenate([np.atleast_1d(a) for a in chunks]) if chunks else np.array([])
-        assert np.allclose(joined, exp[k], atol=0.0, equal_nan=True), k
 
 
 @given(

@@ -190,52 +190,6 @@ def test_kmeans_step_switches_to_join_past_crossover(spark, sf_dir):
     assert got == exp
 
 
-def test_ivf_index_probe_is_partition_pruned_and_exact(spark, sf_dir, tmp_path):
-    """The write-time IVF path: cell-partitioned index + probe must (a)
-    return exactly what the scan-time ann_ivf_topk returns for the same
-    centroids/query, and (b) prune non-probed cells at the PARTITION
-    level (file-index pruning, visible as a partition filter on cell —
-    the scan must not touch all 16 cells)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = S.collect_centroids(emb, 16)
-    path = str(tmp_path / "ivf_index")
-    S.write_ivf_index(emb, path, cents)
-
-    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    pruned = S.ann_ivf_topk_pruned(spark, path, cents, qvec, k=10, n_probe=4)
-    baseline = S.ann_ivf_topk(emb, query_vec_id=0, k=10, n_probe=4, centroids=cents)
-    assert [tuple(r) for r in pruned.collect()] == [tuple(r) for r in baseline.collect()]
-
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:120], plan[:2000]
-    # pruning actually dropped partitions: the executed scan's metrics
-    # report exactly the n_probe probed cells, not the table's 16
-    scan = pruned._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-    n_parts = scan.metrics().get("numPartitions").get().value()
-    assert n_parts == 4  # n_probe of 16 cells
-
-
-def test_lsh_index_probe_is_partition_pruned_and_exact(spark, sf_dir, tmp_path):
-    """Write-time LSH: the Hamming-ball multi-probe over the signature-
-    partitioned index must return exactly the scan-time ann_lsh_topk
-    results and prune to fewer partitions than the table holds."""
-    import glob
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "lsh_index")
-    S.write_lsh_index(emb, path)
-
-    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    pruned = S.ann_lsh_topk_pruned(spark, path, qvec, k=10)
-    baseline = S.ann_lsh_topk(emb, query_vec_id=0, k=10)
-    assert [tuple(r) for r in pruned.collect()] == [tuple(r) for r in baseline.collect()]
-
-    scan = pruned._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-    n_parts = scan.metrics().get("numPartitions").get().value()
-    total = len(glob.glob(f"{path}/sig=*"))
-    assert 0 < n_parts < total  # the Hamming ball pruned real cells
-
-
 def test_quantize_codes_in_range_and_roundtrip(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     mins, maxs = S.collect_quant_params(emb)

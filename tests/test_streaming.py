@@ -554,6 +554,7 @@ def test_stream_ingest_dedup_against_index(spark, sf_dir, tmp_path):
     survivors out — streamed survivors must equal the batch incremental
     dedup's keep set."""
     from trading_etl_python_spark.operators.dedup import (
+        MINHASH_INDEX_SCHEMA,
         banded_signatures,
         minhash_incremental_pairs,
         write_minhash_index,
@@ -568,6 +569,9 @@ def test_stream_ingest_dedup_against_index(spark, sf_dir, tmp_path):
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     idx = str(tmp_path / "mh_index")
     write_minhash_index(corpus, idx)
+    # the stream reads the index with this schema instead of inferring it
+    inferred = spark.read.parquet(idx).schema
+    assert spark.read.schema(MINHASH_INDEX_SCHEMA).parquet(idx).schema == inferred
 
     out = str(tmp_path / "survivors")
     q = stream_ingest_dedup(
@@ -933,3 +937,29 @@ def test_stream_state_partitions_default_is_one_wave_of_slots(spark):
     with stream_state_partitions(spark):
         assert spark.conf.get(key) == str(min(8, spark.sparkContext.defaultParallelism))
     assert spark.conf.get(key) == before
+
+
+def test_stream_builders_on_empty_tables_return_no_rows(spark, sf_dir, tmp_path):
+    """With every table empty the drift, cardinality and bloom-dedup
+    sinks see only empty micro-batches and write nothing, and the ingest
+    index holds no data file; the four stream builders must still return
+    the oracle's 0 rows and columns instead of failing to read them."""
+    import glob
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from trading_etl_python_spark.suite import ORACLES
+    from trading_etl_python_spark.suite import extensions as X
+
+    con = duckdb.connect()
+    for src in glob.glob(os.path.join(sf_dir, "*.parquet")):
+        dst = str(tmp_path / os.path.basename(src))
+        pq.write_table(pq.read_schema(src).empty_table(), dst)
+        con.sql(f"CREATE VIEW {os.path.basename(src)[:-8]} AS SELECT * FROM '{dst}'")
+    for name in ("q_stream_drift", "q_stream_cardinality", "q_stream_dedup", "q_stream_ingest"):
+        want = con.sql(ORACLES[name]).df()
+        got = getattr(X, name)(spark, str(tmp_path)).toPandas()
+        assert len(got) == len(want) == 0, name
+        assert sorted(got.columns) == sorted(want.columns), name

@@ -453,6 +453,13 @@ def minhash_incremental_pairs(
     )
 
 
+#: the schema ``banded_signatures`` produces over the documents table
+#: (bigint ``doc_id``), i.e. what ``write_minhash_index`` stores.  Read
+#: an index with it, not by inference: an index written from an empty
+#: corpus holds no data files, and then reads as empty.
+MINHASH_INDEX_SCHEMA = "doc_id bigint, sig array<bigint>, band int, key string"
+
+
 def write_minhash_index(
     df: DataFrame,
     path: str,

@@ -106,9 +106,3 @@ def indicator_table(bars: DataFrame, warmup: int | None = 26) -> DataFrame:
     if warmup is not None:
         df = df.filter((F.col("_hist") >= warmup) & F.col("sma_20").isNotNull())
     return df.select(*FINAL_COLS)
-
-
-def latest_indicators(bars: DataFrame) -> DataFrame:
-    """The reference's live output: latest gated indicator row per symbol
-    (consumer.py:135,175-180 builds exactly this before insert)."""
-    return W.latest_per_key(indicator_table(bars).withColumnRenamed("symbol", "symbol"))

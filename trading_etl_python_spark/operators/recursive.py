@@ -7,15 +7,12 @@ src/processing/consumer.py:89-98,110-114,122) that no fixed-frame Spark
 window aggregate can express — each output row depends on the *previous
 output*, not a bounded input frame.
 
-Primary implementation: grouped-map ``applyInPandas`` per symbol — Arrow
-batch transfer, numpy recurrences, one shuffle on the key.  This mirrors
-the reference's per-symbol pandas frames exactly, and scales the same way
-Spark's own window exec does (one key's series processed by one task; keys
-are the parallelism unit).  For very long per-key histories — the one
-growth axis key-parallelism does not cover — ``recursive_chunked.py``
-implements the warmup-carry chunk path: global time-range chunks with a
-36-double state vector carried per key, exact to the bit at every chunk
-count (tests/test_chunked.py).
+Implementation: ``_indicator_map`` — one hash exchange on the symbol,
+then ``mapInPandas`` runs numpy recurrences over every key of a
+partition, Arrow batch transfer in and out.  This mirrors the
+reference's per-symbol pandas frames exactly, and scales the same way
+Spark's own window exec does (one key's series processed by one task;
+keys are the parallelism unit).
 
 A secondary, Catalyst-visible formulation via the SQL ``aggregate()``
 higher-order function over a per-key ``collect_list`` lives in
@@ -170,7 +167,7 @@ def adx_rec(h: np.ndarray, lo: np.ndarray, c: np.ndarray, n: int = 14) -> np.nda
     return out
 
 
-# ------------------------------------------------------- Spark grouped-map
+# ----------------------------------------------------- Spark mapInPandas
 
 
 def _schema_str(df: DataFrame, out_cols: dict[str, str]) -> str:
@@ -179,27 +176,12 @@ def _schema_str(df: DataFrame, out_cols: dict[str, str]) -> str:
     )
 
 
-def _indicator_apply(df: DataFrame, out_cols: dict[str, str], fn) -> DataFrame:
-    """Grouped-map scaffold (one Arrow round-trip PER KEY).  Semantically
-    the reference's per-symbol pandas frames; superseded by
-    ``_indicator_map`` for throughput — kept as the simple/debug variant."""
-    schema = _schema_str(df, out_cols)
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["time", "event_id"], kind="mergesort").reset_index(drop=True)
-        for col, arr in fn(pdf).items():
-            pdf[col] = round_half_up(arr, ROUND_DP)
-        return pdf
-
-    return df.groupBy("symbol").applyInPandas(compute, schema=schema)
-
-
 def _indicator_map(df: DataFrame, out_cols: dict[str, str], fn, repartition: bool = True) -> DataFrame:
     """Whole-partition scaffold: co-locate keys with ONE hash exchange on
     symbol, then ``mapInPandas`` processes an entire partition per Python
     task — per-key numpy slices found by sorted boundary scan, no per-group
-    Arrow round-trips.  ~5-10x faster than the grouped-map at many-small-
-    keys shapes (the streaming-symbol workload).
+    Arrow round-trips, which matters at many-small-keys shapes (the
+    streaming-symbol workload).
 
     Scale note: a task materializes its partition (pd.concat) — per-task
     memory is bounded by the shuffle partition count, which ``repartition``

@@ -348,38 +348,6 @@ def merge_upsert(
     return j.select(*key_cols, *picked)
 
 
-def pit_join(
-    probes: DataFrame,
-    history: DataFrame,
-    key_col: str = "user_id",
-    probe_ts_col: str = "ts_p",
-) -> DataFrame:
-    """Point-in-time lookup against an SCD2 history: for each probe
-    (key, ts) keep the dimension version whose [valid_from, valid_to)
-    range covers the timestamp (open version = NULL valid_to) — the
-    standard as-was join every warehouse query against a versioned
-    dimension needs.
-
-    Plan shape: an EQUI-join on the key carries the shuffle; the range
-    predicate rides along as a join filter, so this is a plain
-    hash/sort-merge join, never a nested-loop — per key the history is
-    version-count-sized, so the filter fan-out is bounded by versions
-    per key, not history length."""
-    cond = (
-        (probes[key_col] == history[key_col])
-        & (history["valid_from"] <= probes[probe_ts_col])
-        & (
-            history["valid_to"].isNull()
-            | (probes[probe_ts_col] < history["valid_to"])
-        )
-    )
-    return (
-        probes.join(history, cond)
-        .select(probes["*"], history["version"])
-        .drop(probe_ts_col)
-    )
-
-
 def pit_state_by_day(events: DataFrame) -> DataFrame:
     """End-of-day dimension state per (user, day): build the SCD2
     history from the change stream, probe it with each user's active

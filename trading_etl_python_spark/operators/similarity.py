@@ -17,9 +17,8 @@ Three tiers, by scale:
 4. ``ann_ivf_topk`` — inverted-file (IVF) ANN: assign every vector to its
    nearest coarse centroid MAP-SIDE (broadcast-literal centroid table, no
    shuffle), probe only the ``n_probe`` cells nearest the query, rerank
-   exactly.  At 100 TB the assignment happens at WRITE time and the table
-   is partitioned by cell, turning the probe into a partition-pruned scan
-   of n_probe/n_cells of the data.
+   exactly.  Assignment runs at scan time on every query; no query here
+   reads a stored cell-partitioned index, so none is written.
 """
 
 from __future__ import annotations
@@ -293,57 +292,6 @@ def ivf_assign_join(
 IVF_INLINE_MAX_CELLS = 256
 
 
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids: dict[int, list[float]],
-    id_col: str = "vec_id",
-) -> None:
-    """Materialize the IVF index as a cell-partitioned parquet table —
-    the write-time half of the 100 TB ANN posture: assignment cost is
-    paid ONCE at ingest (map-side argmax, or broadcast-join past the
-    crossover), and every subsequent probe becomes a partition-PRUNED
-    scan of n_probe/n_cells of the data instead of a full pass.
-    ``maxRecordsPerFile`` would bound file sizes at production volume;
-    cells are the physical partition key so the probe filter prunes at
-    the file-index level, before any IO."""
-    if len(centroids) > IVF_INLINE_MAX_CELLS:
-        cdf = centroids_to_df(embeddings.sparkSession, centroids)
-        asn = ivf_assign_join(embeddings, cdf, "cell", id_col)
-    else:
-        asn = ivf_assign(embeddings, centroids, "cell")
-    asn.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def ann_ivf_topk_pruned(
-    spark,
-    index_path: str,
-    centroids: dict[int, list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe an ``write_ivf_index`` table: select the ``n_probe`` cells
-    whose centroids are nearest the query (driver-side over the tiny
-    centroid dict), scan ONLY those partitions (the ``cell`` filter is a
-    partition filter — pruning happens in the file index, verified by
-    tests), exact-rerank the members.  Identical results to the scan-
-    time ``ann_ivf_topk`` on the same centroids."""
-    qvec = [float(v) for v in query_vec]
-    probe = sorted(centroids, key=lambda cid: (-_seq_dot(qvec, centroids[cid]), cid))[:n_probe]
-    qlit = F.array(*[F.lit(v) for v in qvec])
-    cands = spark.read.parquet(index_path).filter(
-        F.col("cell").isin([int(p) for p in probe])
-    )
-    return (
-        cands.select(id_col, "label", dot("embedding", qlit).alias("_sim"))
-        .orderBy(F.col("_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "label", F.round("_sim", 6).alias("cos_sim"))
-    )
-
-
 def ann_ivf_topk(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -413,9 +361,8 @@ def ann_lsh_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane signatures, candidate filter
-    by signature Hamming distance, exact rerank of candidates.  At scale
-    the signature is precomputed+bucketed (write-time), making the probe
-    a partition-pruned point lookup instead of a scan."""
+    by signature Hamming distance, exact rerank of candidates.  The
+    signature is computed at scan time, on every query."""
     sig = _lsh_signature(F.col("embedding"), lsh_planes(n_planes, dim))
     with_sig = embeddings.withColumn("_sig", sig)
     q = with_sig.filter(F.col(id_col) == query_vec_id).select(
@@ -425,65 +372,6 @@ def ann_lsh_topk(
     cands = with_sig.crossJoin(F.broadcast(q)).filter(ham <= max_hamming)
     return (
         cands.select(id_col, "label", dot("embedding", "_qv").alias("_sim"))
-        .orderBy(F.col("_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "label", F.round("_sim", 6).alias("cos_sim"))
-    )
-
-
-def write_lsh_index(
-    embeddings: DataFrame, path: str, n_planes: int = 12, dim: int = 64
-) -> None:
-    """Write-time half of the LSH posture: signatures are computed once
-    at ingest and become the physical partition key, so a probe is a
-    partition-pruned multi-probe lookup (the Hamming ball around the
-    query signature) instead of a full scan + signature recompute.
-    2^n_planes cells; at production volume pick n_planes so cells stay
-    file-sized (the same knob as IVF's n_cells)."""
-    sig = _lsh_signature(F.col("embedding"), lsh_planes(n_planes, dim))
-    embeddings.withColumn("sig", sig).write.mode("overwrite").partitionBy("sig").parquet(path)
-
-
-def _hamming_ball(sig: int, n_bits: int, radius: int) -> list[int]:
-    """All signatures within Hamming distance ``radius`` of ``sig`` —
-    the multi-probe set.  Σ_{r<=radius} C(n_bits, r) values (79 for
-    12 bits, radius 2): a literal IN-list, small enough to prune
-    partitions at the file index."""
-    from itertools import combinations
-
-    out = []
-    for r in range(radius + 1):
-        for bits in combinations(range(n_bits), r):
-            flipped = sig
-            for b in bits:
-                flipped ^= 1 << b
-            out.append(flipped)
-    return out
-
-
-def ann_lsh_topk_pruned(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    max_hamming: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a ``write_lsh_index`` table: the query signature and its
-    Hamming ball are computed driver-side (same ±1 planes, same
-    left-fold dot as the engine), the ball becomes a partition filter,
-    and only matching cells are scanned and exact-reranked.  Identical
-    results to the scan-time ``ann_lsh_topk`` for the same planes."""
-    qvec = [float(v) for v in query_vec]
-    planes = lsh_planes(n_planes, dim)
-    qsig = sum(1 << p for p, w in enumerate(planes) if _seq_dot(qvec, w) > 0)
-    probe = _hamming_ball(qsig, n_planes, max_hamming)
-    qlit = F.array(*[F.lit(v) for v in qvec])
-    cands = spark.read.parquet(index_path).filter(F.col("sig").isin(probe))
-    return (
-        cands.select(id_col, "label", dot("embedding", qlit).alias("_sim"))
         .orderBy(F.col("_sim").desc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, "label", F.round("_sim", 6).alias("cos_sim"))
@@ -1335,8 +1223,9 @@ def ann_ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ — the FAISS billion-scale default, composed from the two
     halves this module already proves separately: the IVF coarse probe
-    prunes the SCAN to n_probe/n_cells of the data (partition pruning
-    with a ``write_ivf_index`` layout), and within the probed cells
+    keeps only the n_probe/n_cells of the data whose cells are nearest
+    the query (a filter on the scan-time cell assignment), and within
+    the probed cells
     candidates are scored by PQ asymmetric distance (m LUT lookups per
     candidate — no vector arithmetic), with the ADC top ``rerank``
     exactly re-scored: the result is the exact top ``k`` within the

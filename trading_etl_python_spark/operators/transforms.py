@@ -46,12 +46,6 @@ def json_encode_wire(
     )
 
 
-def rename_project(df: DataFrame, mapping: dict[str, str], ordered_cols: list[str]) -> DataFrame:
-    """P1+P2 — source-schema adaptation (backfill.py:118-128) + ordered
-    projection to the storage column order (backfill.py:137)."""
-    return df.withColumnsRenamed(mapping).select(*ordered_cols)
-
-
 def null_filter(df: DataFrame, required: list[str]) -> DataFrame:
     """P4 — drop rows missing required fields (producer.py:67-75)."""
     cond = F.lit(True)

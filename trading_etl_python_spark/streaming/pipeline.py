@@ -529,11 +529,11 @@ def stream_ingest_dedup(
     Scale: per batch, cost is O(batch x bands + collisions) — the
     historical corpus is touched only through band-partition/row-group
     pruned index reads, never reshingled (operators/dedup docstring)."""
-    from ..operators.dedup import minhash_incremental_pairs
+    from ..operators.dedup import MINHASH_INDEX_SCHEMA, minhash_incremental_pairs
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        idx = spark.read.parquet(index_path)
+        idx = spark.read.schema(MINHASH_INDEX_SCHEMA).parquet(index_path)
         dups = minhash_incremental_pairs(batch_df, idx, threshold=threshold)
         keep = batch_df.join(
             dups.select("doc_id").distinct(), "doc_id", "left_anti"

@@ -31,7 +31,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 _ALL: dict[str, Builder] = {}
 ORACLES: dict[str, str] = {}
 #: per-query scale-posture tier (r8 VERDICT #4): "production" |
-#: "measurement" | "demo" — see the q() decorator docstring.  Consumed
+#: "measurement" | "demo" — see ``_registry.registrar``.  Consumed
 #: by tools/sweep.py --compare (only production superlinearity is a
 #: defect) and enforced complete by the assert below.
 TIERS: dict[str, str] = {}
@@ -80,6 +80,12 @@ _TOUCHED: dict[str, int] = {
     # sinks.upsert_ignore reads the existing keys with the batch's schema,
     # and a sink that no row reached reads as an empty table
     **dict.fromkeys(("q_backfill_job", "q_backfill_incremental"), 15),
+    # a stream sink that no batch wrote reads as an empty table, and the
+    # ingest probe reads its MinHash index with a fixed schema
+    **dict.fromkeys((
+        "q_stream_drift", "q_stream_cardinality", "q_stream_dedup",
+        "q_stream_ingest",
+    ), 15),
     # stream_state_partitions defaults to min(8, defaultParallelism), and
     # run_replay_pipeline (q_stream_replay) now starts its query under it
     **dict.fromkeys((

@@ -14,29 +14,12 @@ from pyspark.sql import functions as F
 
 from ..operators import eventflow as EV
 from ..sources.tables import load_events
+from ._registry import registrar
 
 QUERIES = {}
 ORACLES = {}
 TIERS = {}
-
-
-def q(name: str, oracle: str | None = None, tier: str = "production"):
-    """Register a query.  ``tier`` encodes the scale posture the docs
-    previously carried only in prose (r8 VERDICT #4): "production" =
-    deployable plan shape at 100 TB (bounded pair/candidate space);
-    "measurement" = exact/unbounded twin kept to verify or score a
-    production path (expected superlinear on adversarial corpora);
-    "demo" = deliberately simplified pedagogical form.  tools/sweep.py
-    --compare flags only production-tier superlinearity; lint requires
-    every entry to carry a valid tier."""
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        TIERS[name] = tier
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES, TIERS)
 
 
 @q(

@@ -27,32 +27,15 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as TX
 from ..sources.tables import load_events, load_table
+from ._registry import registrar
 from .core import BARS_CTE
 
 QUERIES = {}
 ORACLES = {}
 TIERS = {}
+q = registrar(QUERIES, ORACLES, TIERS)
 
 TOKS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-
-def q(name: str, oracle: str | None = None, tier: str = "production"):
-    """Register a query.  ``tier`` encodes the scale posture the docs
-    previously carried only in prose (r8 VERDICT #4): "production" =
-    deployable plan shape at 100 TB (bounded pair/candidate space);
-    "measurement" = exact/unbounded twin kept to verify or score a
-    production path (expected superlinear on adversarial corpora);
-    "demo" = deliberately simplified pedagogical form.  tools/sweep.py
-    --compare flags only production-tier superlinearity; lint requires
-    every entry to carry a valid tier."""
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        TIERS[name] = tier
-        return fn
-
-    return deco
 
 
 # ------------------------------------------------------------------- dedup
@@ -1077,6 +1060,17 @@ def _sink_root() -> str:
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         _SINK_ROOT.append(root)
     return _SINK_ROOT[0]
+
+
+def _read_sink(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The parquet table a sink wrote at ``path``, or an empty frame of
+    ``schema`` (what the sink writes) when it wrote nothing: the stream
+    sinks skip empty micro-batches, and an upsert that no row reached
+    creates no table.  ``schema`` may be a function returning it, when
+    the schema costs a plan to build."""
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
+    return spark.createDataFrame([], schema() if callable(schema) else schema)
 
 
 # Sketch values themselves are engine-specific (HLL++ / KLL internals),
@@ -3937,11 +3931,9 @@ def q_backfill_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(_sink_root(), f"backfill_{next(_SINK_SEQ)}")
     jobs.backfill_job(spark, sf_dir, path, warmup=26)
     rerun = jobs.backfill_job(spark, sf_dir, path, warmup=26)
-    if os.path.isdir(path):
-        tbl = spark.read.parquet(path)
-    else:  # no row passed the gate, so upsert_ignore wrote no table
-        schema = jobs.indicator_table(jobs.bars(spark, sf_dir), warmup=26).schema
-        tbl = spark.createDataFrame([], schema)
+    tbl = _read_sink(
+        spark, path, lambda: jobs.indicator_table(jobs.bars(spark, sf_dir), warmup=26).schema
+    )
     return (
         tbl.groupBy("symbol")
         .agg(
@@ -4005,11 +3997,7 @@ def q_backfill_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert_ignore(pre, path, keys=("time", "symbol"))
     jobs.incremental_backfill_job(spark, sf_dir, path, since=cut)
     rerun = jobs.incremental_backfill_job(spark, sf_dir, path, since=cut)
-    if os.path.isdir(path):
-        out = spark.read.parquet(path)
-    else:  # no row reached the sink, so upsert_ignore wrote no table
-        out = spark.createDataFrame([], pre.schema)
-    out = out.filter(F.col("time") >= F.lit(cut))
+    out = _read_sink(spark, path, pre.schema).filter(F.col("time") >= F.lit(cut))
     return out.select("symbol", "time", "sma_20", "stoch_k_14").withColumn(
         "rows_rerun", F.lit(rerun).cast("long")
     )
@@ -4399,7 +4387,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_bloom_dedup(
             stream, out, ckpt, key_col="key", m_bits=8192
         ).awaitTermination()
-    return spark.read.parquet(out).select("key")
+    return _read_sink(spark, out, "key bigint, event_id bigint").select("key")
 
 
 @q(
@@ -5482,7 +5470,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         handle = stream_drift_monitor(stream, ref, sink, ckpt)
         handle.awaitTermination()
-    return spark.read.parquet(sink)
+    return _read_sink(spark, sink, "event_type string, psi double, batch_id bigint")
 
 
 @q(
@@ -5512,7 +5500,7 @@ def q_stream_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             events_file_stream(spark, sf_dir), sink, ckpt
         )
         handle.awaitTermination()
-    return spark.read.parquet(sink)
+    return _read_sink(spark, sink, "event_type string, hll_est double, batch_id bigint")
 
 
 @q(
