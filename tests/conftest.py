@@ -22,3 +22,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def degenerate_tables(sf_dir, tmp_path):
+    """Write every sf_dir table cut to a shape under tmp_path and return
+    the directory: ``degenerate_tables("empty")`` keeps no rows (schema
+    only), ``degenerate_tables("first7")`` each table's first 7 rows."""
+    import pyarrow.parquet as pq
+
+    def write(shape: str) -> str:
+        keep = {"empty": 0, "first7": 7}[shape]
+        out = tmp_path / shape
+        out.mkdir()
+        for src in sorted(Path(sf_dir).glob("*.parquet")):
+            pq.write_table(pq.read_table(src).slice(0, keep), out / src.name)
+        return str(out)
+
+    return write

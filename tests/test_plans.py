@@ -556,8 +556,7 @@ def test_pq_topk_two_take_ordered_tiers_no_join_on_vectors(spark, sf_dir):
     """PQ ADC top-k: encoding + LUT are map-side literals over ONE
     corpus scan (plus the broadcast 1-row query); both selection tiers
     compile to TakeOrderedAndProject — no global sort, no vector join.
-    (The formatted plan is deliberately absent from PLANS.md: the
-    inlined codebooks make it ~140k chars.)"""
+    (The formatted plan is ~140k chars: the codebooks are inlined.)"""
     plan = _executed(QUERIES["q_pq_topk"](spark, sf_dir))
     assert plan.count("TakeOrderedAndProject") == 2, plan.count(
         "TakeOrderedAndProject"
@@ -760,7 +759,7 @@ def test_tfidf_top_terms_no_action_during_construction(spark, sf_dir):
     eager construction in the registry); N is now the same in-plan
     1-row aggregate + broadcast crossJoin as tfidf_cosine.  The
     registry-wide closure of this class is tools/lint_registry.py
-    --lazy (r12 artifact: sweeps/r12_lazy_lint.log)."""
+    --lazy (r12 artifact: a3e8e3f:sweeps/r12_lazy_lint.log)."""
     from trading_etl_python_spark.operators.text import tfidf_top_terms
 
     docs = spark.createDataFrame(
@@ -854,8 +853,8 @@ def test_clustering_coef_lineage_truncated_at_checkpoint(spark, sf_dir):
 
 
 def test_wide_argmax_detector_classifies_buffer_shapes(spark):
-    """Pin the skinny-argmax LINT itself (r12 VERDICT #5 / PLANS.md
-    §73): tools/lint_registry._wide_argmax_hits must flag max_by/min_by
+    """Pin the skinny-argmax LINT itself (r12 VERDICT #5 / ARCHITECTURE.md
+    §4): tools/lint_registry._wide_argmax_hits must flag max_by/min_by
     whose value OR ordering subtree carries an array (either half rides
     the SortAggregate buffer — the r12 semdedup 50 GB spill cliff) and
     must NOT flag skinny argmax, plain min/max, or collect_list (a

@@ -502,7 +502,7 @@ def test_streaks_partition_the_series(spark, closes):
         assert -cur <= out.max_down_streak
 
 
-# ------------------------- r10: semdedup cell-cap laws (PLANS §72.1)
+# ------------------------- r10: semdedup cell-cap laws (a3e8e3f:PLANS.md §72.1)
 
 semdedup_corpora = st.lists(
     st.tuples(

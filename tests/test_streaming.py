@@ -939,27 +939,23 @@ def test_stream_state_partitions_default_is_one_wave_of_slots(spark):
     assert spark.conf.get(key) == before
 
 
-def test_stream_builders_on_empty_tables_return_no_rows(spark, sf_dir, tmp_path):
+def test_stream_builders_on_empty_tables_return_no_rows(spark, degenerate_tables):
     """With every table empty the drift, cardinality and bloom-dedup
     sinks see only empty micro-batches and write nothing, and the ingest
     index holds no data file; the four stream builders must still return
     the oracle's 0 rows and columns instead of failing to read them."""
-    import glob
-    import os
-
     import duckdb
-    import pyarrow.parquet as pq
 
+    from trading_etl_python_spark.sources.tables import TABLES
     from trading_etl_python_spark.suite import ORACLES
     from trading_etl_python_spark.suite import extensions as X
 
+    empty = degenerate_tables("empty")
     con = duckdb.connect()
-    for src in glob.glob(os.path.join(sf_dir, "*.parquet")):
-        dst = str(tmp_path / os.path.basename(src))
-        pq.write_table(pq.read_schema(src).empty_table(), dst)
-        con.sql(f"CREATE VIEW {os.path.basename(src)[:-8]} AS SELECT * FROM '{dst}'")
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{empty}/{t}.parquet'")
     for name in ("q_stream_drift", "q_stream_cardinality", "q_stream_dedup", "q_stream_ingest"):
         want = con.sql(ORACLES[name]).df()
-        got = getattr(X, name)(spark, str(tmp_path)).toPandas()
+        got = getattr(X, name)(spark, empty).toPandas()
         assert len(got) == len(want) == 0, name
         assert sorted(got.columns) == sorted(want.columns), name

@@ -15,7 +15,7 @@ class stays closed.
 
 ``--argmax`` (r12 VERDICT #5) scans every registry plan for max_by/
 min_by aggregates carrying an array/map-typed value or ordering
-expression — the PLANS.md §73 skinny-argmax law, closed as a class:
+expression — the ARCHITECTURE.md §4 skinny-argmax law, closed as a class:
 a wide buffer forces SortAggregate, which sorts the whole
 pre-aggregation stream WITH the payload (the r12 semdedup 50 GB spill
 cliff).  Legit exceptions go in ARGMAX_ALLOW with the cardinality
@@ -211,7 +211,7 @@ def lint_lazy() -> int:
 
 
 # Queries allowed to carry an array/map-typed max_by/min_by buffer —
-# the PLANS.md §73 skinny-argmax law says there should be NONE (a wide
+# the ARCHITECTURE.md §4 skinny-argmax law says there should be NONE (a wide
 # payload in a sort-aggregated argmax buffer is the semdedup 50 GB
 # spill cliff); any future entry here needs the cardinality argument
 # written next to it (e.g. "group count is bounded by K, not data").
@@ -237,7 +237,7 @@ def _expr_trees(flat: list) -> list:
 
 def _subtree_touches_wide(node: dict) -> bool:
     """True if any node in the expression subtree is array/map-typed —
-    the 'wide payload' of the skinny-argmax law (PLANS.md §73).
+    the 'wide payload' of the skinny-argmax law (ARCHITECTURE.md §4).
     Catalyst JSON writes simple types as strings ("double") and complex
     types as nested dicts ({"type": "array", ...}); a struct hiding an
     array deep inside is still wide, so the dict form is searched
@@ -286,7 +286,7 @@ def _wide_argmax_hits(plan_json: str) -> list[str]:
 def lint_argmax() -> int:
     """Construct every registry query at sf0.001 and fail if any plan
     aggregates a wide (array/map) payload through max_by/min_by — the
-    r12 semdedup memory cliff (PLANS.md §73), closed as a CLASS
+    r12 semdedup memory cliff (ARCHITECTURE.md §4), closed as a CLASS
     (r12 VERDICT #5): the buffer forces SortAggregate, which sorts the
     full pre-aggregation stream WITH the payload; at a product-term
     cardinality that is a spill cliff, invisible at test SFs."""

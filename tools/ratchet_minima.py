@@ -1,14 +1,14 @@
 """Ratchet the canonical headline minima reference DOWN from a bench
-series (r13: bench.py and bench_paired.py both read
-sweeps/headline_minima.json; this tool is the only writer).
+series (bench.py reads sweeps/headline_minima.json as its noise-rescue
+reference; this tool is the only writer).
 
-Reads one or more bench-runs .jsonl files (tools/bench_paired.py
-output) and/or BENCH_r*.json files, takes each query's minimum across
-every run found, and lowers — never raises — the stored reference.
+Reads one or more files of bench.py result lines (``python bench.py >>
+runs.jsonl``; a .json file holds one result), takes each query's minimum
+across every run found, and lowers — never raises — the stored reference.
 Raising a reference (a semantics or protocol re-anchor) is a deliberate
 manual edit with a note in the file's _protocol field, per BASELINE.md.
 
-Usage: python tools/ratchet_minima.py sweeps/r13_bench_runs.jsonl [...]
+Usage: python tools/ratchet_minima.py runs.jsonl [...]
 """
 
 from __future__ import annotations

@@ -77,16 +77,16 @@ def compare(a_path: str, b_path: str, factor: float = 10.0) -> None:
 
 def merge_min(paths: list[str], out: str) -> None:
     """Per-query minima across N sweep files (the r10 two-pass
-    protocol, PLANS §72.2) — errors (-1) survive only if a query
-    errored in EVERY pass.
+    protocol) — errors (-1) survive only if a query errored in EVERY
+    pass.
 
     Guards (r10 ADVICE): at least 2 input passes (min-of-one is not the
     protocol, and a single trailing arg would silently become the
     output path), and any key-set mismatch across passes FAILS loudly —
     a partial pass (run with an ``only`` filter) would otherwise shrink
-    the minima file, and since bench_paired.py only checks queries
-    present in its reference, a too-small reference quietly weakens the
-    regression gate."""
+    the minima file, and since bench.py only rescues queries present
+    in its reference, a too-small reference quietly weakens the noise
+    rescue."""
     if len(paths) < 2:
         raise SystemExit(
             f"--min needs >= 2 input sweeps + output path; got {len(paths)} input(s)"

@@ -10,7 +10,7 @@ Scale notes (100 TB posture):
 
 - returns / volatility / drawdown are per-key window expressions: one
   hash(symbol) exchange, frame state O(lookback), same scale envelope as
-  the indicator table (PLANS.md §1).
+  the indicator table (ARCHITECTURE.md §2).
 - correlation matrices are inherently quadratic in the number of series,
   so `basket_correlation` correlates a *chosen basket* (deterministic
   key predicate), aligned on calendar day. The daily-aggregated basket
@@ -375,7 +375,7 @@ def ichimoku(
 
     Scale shape: four fixed-frame window aggregates over ONE
     hash(symbol) exchange — identical envelope to the indicator table
-    (PLANS.md §1); max/min midpoints are exact float arithmetic, so
+    (ARCHITECTURE.md §2); max/min midpoints are exact float arithmetic, so
     the lines are emitted UNROUNDED: every input is selected (max/min)
     then combined with fixed IEEE ops in identical order on both
     engines, so the doubles are bit-equal — rounding would only
@@ -468,7 +468,7 @@ def var_es(df: DataFrame, tail: int = 20, min_days: int = 15) -> DataFrame:
     over 6dp-rounded returns with a day tiebreak are integer-exact on
     every engine, so the oracle can never flip on interpolation-formula
     or float-accumulation differences (the q_spearman lesson,
-    PLANS.md §23)."""
+    ARCHITECTURE.md §4)."""
     r = _daily_returns(df)
     wn = Window.partitionBy("symbol")
     wr = wn.orderBy(F.col("r").asc(), F.col("day").asc())

@@ -369,7 +369,7 @@ def logreg_quality(
     corpus-size-independent, the kmeans/PCA house pattern; the driver
     holds only the weight vector.  Weights are 6dp-rounded between
     iterations ON BOTH ENGINES so the recursion never amplifies a
-    float-accumulation ulp into a different trajectory (PLANS.md §23),
+    float-accumulation ulp into a different trajectory (ARCHITECTURE.md §4),
     and the final accuracy decision is the sign of the deterministic
     dot product (z > 0), never a rounded-probability compare.
 

@@ -1535,7 +1535,7 @@ def minhash_pair_eval(
 
     All counts are exact integers from one full outer join on the pair
     key; precision/recall are 6dp rounds of single deterministic
-    int64-ratio doubles (PLANS.md §62 class a — no aggregate of floats
+    int64-ratio doubles (ARCHITECTURE.md §4 — no aggregate of floats
     anywhere)."""
     stats = F.broadcast(docs.agg(F.count(F.lit(1)).alias("_n")))
     den = F.greatest(
@@ -1601,8 +1601,8 @@ def eval_contamination_rate(
     small by construction and broadcast; the train corpus is scanned
     once and never shuffles on its own size (one broadcast hash join +
     distinct + per-eval-doc aggregation).  Counts are exact integers;
-    the rate is a 6dp round of one int64-ratio double (PLANS.md §62
-    class a)."""
+    the rate is a 6dp round of one int64-ratio double
+    (ARCHITECTURE.md §4)."""
     ev = shingles(df.filter(eval_pred), n, text_col, id_col)
     # train doc identity is never needed here (unlike `contamination`):
     # distinct the train shingles BEFORE the join so each eval shingle

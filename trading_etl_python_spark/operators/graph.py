@@ -697,7 +697,8 @@ def degree_assortativity(
         (F.col("n") / F.lit(2)).cast("long").alias("n_edges"),
         "max_degree",
         (
-            F.col("n").cast("double") / F.col("n_nodes").cast("double")
+            F.col("n").cast("double")
+            / F.nullif(F.col("n_nodes").cast("double"), F.lit(0.0))
         ).alias("mean_degree"),
         F.when(
             (denx > 0) & (deny > 0),

@@ -159,7 +159,7 @@ def train_ivf_kmeans(
     sample, assignment stays map-side).  Engine-seeded -> queries built on
     these are rows-only checkable, not value-hash.
 
-    Skew warning (r10, PLANS §72.1): on modal/blob-shaped embedding
+    Skew warning (r10, a3e8e3f:PLANS.md §72.1): on modal/blob-shaped embedding
     corpora trained centroids produce heavily SKEWED cells (measured:
     17% of a 20k corpus in one cell at K=47), and semdedup's pair join
     costs sum(|cell|^2) — pass ``max_cell`` to semdedup when feeding it
@@ -245,7 +245,7 @@ def ivf_assign_join(
     WITH every row's embedding: at sf10 (200k x 448 = 89.6M wide rows)
     that one stage spilled 50 GB memory / 23 GB disk and pushed the
     designed ~N^1.5 semdedup family to a measured 39x per 10x data
-    (sweeps/r12_semdedup_audit_sf10.json).  Dropping the payload from
+    (a3e8e3f:sweeps/r12_semdedup_audit_sf10.json).  Dropping the payload from
     the aggregation leaves the same N*K dot products but only 24-byte
     rows in the sort, and the join back is one linear hash(id)-aligned
     pass — assignment semantics (incl. tie-break) are bit-identical.
@@ -497,7 +497,7 @@ SEMDEDUP_MIN_CELLS = 16
 #: balanced size ceil(N/K) are sub-split (r10 VERDICT #2 -> r11
 #: default).  4x is deliberately generous: the bound is INERT on
 #: balanced cells (where |c| ~ N/K) and engages exactly where the r10
-#: balance measurement (sweeps/r10_semdedup_scale.json) showed trained
+#: balance measurement (a3e8e3f:sweeps/r10_semdedup_scale.json) showed trained
 #: centroids blowing up sum|c|^2 — 12% of the corpus in one cell, ~8x
 #: the balanced pair work.  With the bound, worst-case pair work is
 #: ~N * 4*ceil(N/K) = 4*N^1.5 at K=sqrt(N) — the same order as the
@@ -555,7 +555,7 @@ def semdedup(
     ``max_cell`` (r10; default since r11) bounds the pair space against
     cell SKEW: the in-cell join costs sum(|c|^2), which equals the
     idealized N^2/K only for BALANCED cells — the r10 balance
-    measurement (sweeps/r10_semdedup_scale.json) found trained KMeans
+    measurement (a3e8e3f:sweeps/r10_semdedup_scale.json) found trained KMeans
     centroids on blob-shaped data putting 12% of the corpus in ONE cell
     (sum_sq ~8x the balanced value at the same K), so wall-clock is
     governed by the largest cell, not by K.  With ``max_cell=m`` every
@@ -1409,7 +1409,7 @@ def silhouette_scores(
     broadcast-sized join on the dim index (centroids are k×dim rows),
     one (vector, centroid) aggregation.  No pair space anywhere.
 
-    Exactness (PLANS.md §62 shape 1): components quantize to 1e-6
+    Exactness (ARCHITECTURE.md §4 shape 1): components quantize to 1e-6
     integer units (ROUND half-away-from-zero agrees across engines);
     centroids are FLOOR-pattern integer means kept IN units; squared
     distances are exact BIGINT sums (|x| <= 0.6 -> per-vector distance
@@ -1462,8 +1462,8 @@ def cluster_quality(
     count, within-cluster inertia (Σ a_sq, pre-divided to 1e-6 units
     per row so the corpus-level sum stays int64 at any N), and the
     mean silhouette via the FLOOR pattern (each per-vector silhouette
-    quantized to 1e-6 ints, summed exactly, FLOOR(Σq/n)/1e6 — PLANS.md
-    §62 shape 2; NULL silhouettes are excluded from both Σq and n on
+    quantized to 1e-6 ints, summed exactly, FLOOR(Σq/n)/1e6 —
+    ARCHITECTURE.md §4 shape 2; NULL silhouettes are excluded from both Σq and n on
     both engines)."""
     s = silhouette_scores(emb, id_col, label_col, vec_col)
     sq = F.round(F.col("silhouette") * F.lit(1e6), 0).cast("long")

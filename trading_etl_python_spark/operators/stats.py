@@ -5,7 +5,7 @@ inferential layer a data-quality / experimentation pipeline needs:
 Welch's t, Mann-Whitney U (tie-corrected), chi-square independence,
 and a precision/recall threshold sweep).
 
-Parity design (PLANS.md §51): every test statistic is a SHORT, FIXED
+Parity design (a3e8e3f:PLANS.md §51): every test statistic is a SHORT, FIXED
 chain of double operations applied to EXACT integer aggregates
 (quantized sums, counts, rank sums) — the engines' aggregation trees
 can only differ in how they combine the integers, which is exact, so
@@ -25,6 +25,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _nz(e):
+    """NULL where ``e`` is 0, so ``x / _nz(e)`` is NULL there, as x / 0
+    is in the DuckDB oracle (ANSI Spark raises DIVIDE_BY_ZERO instead)."""
+    return F.nullif(e, F.lit(0.0))
 
 
 def welch_ttest(
@@ -64,15 +70,15 @@ def welch_ttest(
     def dbl(c):
         return F.col(c).cast("double")
 
-    mx = dbl("sx") / dbl("nx")
-    my = dbl("sy") / dbl("ny")
-    vx = (dbl("ssx") - dbl("sx") * dbl("sx") / dbl("nx")) / (dbl("nx") - F.lit(1.0))
-    vy = (dbl("ssy") - dbl("sy") * dbl("sy") / dbl("ny")) / (dbl("ny") - F.lit(1.0))
-    ux = vx / dbl("nx")
-    uy = vy / dbl("ny")
-    t = (mx - my) / F.sqrt(ux + uy)
-    dfw = (ux + uy) * (ux + uy) / (
-        ux * ux / (dbl("nx") - F.lit(1.0)) + uy * uy / (dbl("ny") - F.lit(1.0))
+    mx = dbl("sx") / _nz(dbl("nx"))
+    my = dbl("sy") / _nz(dbl("ny"))
+    vx = (dbl("ssx") - dbl("sx") * dbl("sx") / _nz(dbl("nx"))) / _nz(dbl("nx") - F.lit(1.0))
+    vy = (dbl("ssy") - dbl("sy") * dbl("sy") / _nz(dbl("ny"))) / _nz(dbl("ny") - F.lit(1.0))
+    ux = vx / _nz(dbl("nx"))
+    uy = vy / _nz(dbl("ny"))
+    t = (mx - my) / _nz(F.sqrt(ux + uy))
+    dfw = (ux + uy) * (ux + uy) / _nz(
+        ux * ux / _nz(dbl("nx") - F.lit(1.0)) + uy * uy / _nz(dbl("ny") - F.lit(1.0))
     )
     return g.select(
         "grp",
@@ -136,10 +142,12 @@ def mann_whitney(
     u = u2.cast("double") / F.lit(2.0)
     n = F.col("na") + F.col("nb")
     mu = dbl("na") * dbl("nb") / F.lit(2.0)
-    tie_term = F.col("ties").cast("double") / (n.cast("double") * (n.cast("double") - F.lit(1.0)))
+    tie_term = F.col("ties").cast("double") / _nz(
+        n.cast("double") * (n.cast("double") - F.lit(1.0))
+    )
     sig2 = dbl("na") * dbl("nb") / F.lit(12.0) * ((n.cast("double") + F.lit(1.0)) - tie_term)
-    z = (u - mu) / F.sqrt(sig2)
-    auc = u / (dbl("na") * dbl("nb"))
+    z = (u - mu) / _nz(F.sqrt(sig2))
+    auc = u / _nz(dbl("na") * dbl("nb"))
     return g.select(
         "grp",
         F.col("na").cast("long").alias("n_a"),

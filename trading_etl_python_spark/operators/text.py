@@ -190,7 +190,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5, id_col: str = "doc_id") -> DataFr
     # rank on the ROUNDED score (token tiebreak): the raw product is a
     # deterministic scalar of counts, but ln() can differ by 1 ulp
     # across libm implementations — rounded-score+id ordering is the
-    # engine-invariant pattern (PLANS.md §23.4)
+    # engine-invariant pattern (ARCHITECTURE.md §4)
     w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("token").asc())
     return (
         scored.withColumn("_rn", F.row_number().over(w))
@@ -1321,7 +1321,7 @@ def zipf_fit(df: DataFrame, group_col: str = "source", text_col: str = "text") -
     """Zipf's-law fit per corpus slice: OLS slope/intercept/r2 of
     ln(frequency) on ln(rank) over the slice's token frequency table
     (rank by (cnt DESC, token) — deterministic).  Both log axes are
-    quantized to 1e-4 units (the OLS pattern, PLANS §23) so every
+    quantized to 1e-4 units (the OLS pattern, ARCHITECTURE.md §4 shape 1) so every
     moment sum is an exact integer; a well-formed natural corpus slopes
     near -1."""
     from pyspark.sql import Window
@@ -1435,7 +1435,7 @@ def textrank_keywords(
     # the symmetrizing union deliberately inlines the positional
     # self-join twice: ReusedExchange dedups the shuffle at runtime,
     # and that beats eagerly materializing the (corpus-sized) pair set
-    # — measured 10.4 s vs 20.0 s at sf1.  Contrast PLANS §58, where
+    # — measured 10.4 s vs 20.0 s at sf1.  Contrast a3e8e3f:PLANS.md §58, where
     # the pair build is NOT exchange-reusable (checkpointed RDD input)
     # and checkpoint-before-union wins instead.
     pairs = a.join(b, ["_rid", "p"]).filter(F.col("u") != F.col("v"))
@@ -1511,7 +1511,7 @@ def token_psi_by_source(
     slice totals (slices are few by construction), and an S×V grid via
     broadcast of the slice list onto the vocab table — O(slices ×
     vocab), never corpus-squared.  Per-token PSI terms quantize to 1e-9
-    integer units before the vocab-order-sensitive sum (PLANS.md §62:
+    integer units before the vocab-order-sensitive sum (ARCHITECTURE.md §4:
     term ≤ ~10 → ≤1e10 units; 1e8-token vocab still fits int64), and
     the judged value is the exact integer sum divided once by 1e9."""
     tok = with_tokens(docs).select(

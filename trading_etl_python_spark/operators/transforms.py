@@ -175,8 +175,8 @@ def psi_drift(
     rows; the reference (min, max) ride in as a broadcast 1-row (or
     per-group) table.  Nothing driver-side, no sort.
 
-    ``quantized=True`` switches the judged sum to the PLANS.md §62
-    shape: each bucket term quantized to 1e-9 integer units before the
+    ``quantized=True`` switches the judged sum to the ARCHITECTURE.md
+    §4 shape: each bucket term quantized to 1e-9 integer units before the
     (order-sensitive) sum, the PSI emitted as a 6dp round of the exact
     integer sum / 1e9 — required for NEW judged queries (the streaming
     drift monitor).  The default stays float-summed for q_psi_drift's
@@ -657,7 +657,7 @@ def zscore_normalize(
     group key (AQE broadcasts the stats side — |groups| rows); the
     normalization itself is map-side.  Outputs rounded 6dp (group
     moments are accumulation-order floats; output value, not a
-    decision — PLANS.md §23.4 posture)."""
+    decision — ARCHITECTURE.md §4 posture)."""
     from pyspark.sql import functions as F
 
     stats = events.groupBy(group_col).agg(

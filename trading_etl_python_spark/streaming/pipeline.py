@@ -387,7 +387,7 @@ def stream_stream_join(
     (watermark + range bound) and evicts it after — bounded state on
     unbounded streams.  Shuffles both sides on ``user_id`` once; at scale
     this is the same co-partitioned hash join as the batch interval join
-    (PLANS.md §13).
+    (suite/behavior.q_range_join).
 
     a: probe events (view/click), b: window-opening events (error).
     """
@@ -576,7 +576,7 @@ def stream_drift_monitor(
         if batch_df.isEmpty():
             return
         # quantized: judged rows must not be rounded float sums
-        # (PLANS.md §62) — each PSI term is 1e-9-integer-quantized
+        # (ARCHITECTURE.md §4) — each PSI term is 1e-9-integer-quantized
         out = psi_drift(reference, batch_df, value_col, group_col, quantized=True)
         if with_ks:
             from ..operators.transforms import ks_drift

@@ -4,7 +4,7 @@ that reproduces the exact semantics (driver contract in
 __spark_entry__.py).
 
 Numeric-parity rules shared by builders and oracles (see operators/
-windows.py docstring and the PLANS.md §62 rulebook): deterministic
+windows.py docstring and the ARCHITECTURE.md §4 rules): deterministic
 (time, event_id) intra-key order, explicit warmup-count guards,
 NULLIF'd denominators, and — for judged aggregates over doubles —
 integer quantization BEFORE aggregation (micro-unit sums, FLOOR-pattern
@@ -91,6 +91,11 @@ _TOUCHED: dict[str, int] = {
     **dict.fromkeys((
         "q_stream_replay", "q_stream_sessions", "q_stream_topk",
         "q_stream_join", "q_stream_candles",
+    ), 15),
+    # x / 0 is NULL on degenerate tables (an empty graph, a test side
+    # with fewer than two rows), as in the oracle, not DIVIDE_BY_ZERO
+    **dict.fromkeys((
+        "q_degree_assort", "q_assort_minhash", "q_welch_ttest", "q_mannwhitney",
     ), 15),
 }
 assert set(_TOUCHED) <= set(_ALL)

@@ -503,7 +503,7 @@ def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.minhash_lsh_verified_pairs).  Library-native
     measurement twin — q_minhash_banded_verified is the bounded
     production shape (r8; the ML path's OR-only single-hash tables
-    give linearly-growing buckets, PLANS.md §70)."""
+    give linearly-growing buckets, a3e8e3f:PLANS.md §70)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_verified_pairs(docs, threshold=0.5, num_hash_tables=16)
 
@@ -1421,7 +1421,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates + exact Jaccard>=0.5 verify, r8 VERDICT #2); oracle is
     the recursive-CTE transitive closure over the same banded pair
     build (edges MATERIALIZED so the recursion never re-runs the
-    signature chain — the q_trix precedent, PLANS.md §43)."""
+    signature chain — the q_trix precedent, a3e8e3f:PLANS.md §43)."""
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_clusters(docs, n=3, threshold=0.5)
 
@@ -2490,7 +2490,7 @@ def q_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_cell`` are sub-split into ceil(|c|/m) portable-hash groups
     and exact cosine runs only within a (cell, sub) group — worst-case
     pair work ~N*m, LINEAR in N regardless of cell skew.  Born from
-    the r10 balance measurement (sweeps/r10_semdedup_scale.json):
+    the r10 balance measurement (a3e8e3f:sweeps/r10_semdedup_scale.json):
     the in-cell join costs sum(|c|^2), and trained KMeans centroids on
     blob-shaped embeddings put 12% of the corpus in ONE cell (~8x the
     balanced N^2/K), so at 100 TB the largest cell — not K — governs
@@ -2526,7 +2526,7 @@ def q_semdedup_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_semdedup: K=ceil(sqrt(N)), m=4*ceil(N/K)) self-tunes granularity
     for unknown N at the compute-balanced ~N^1.5 — the r11 sf1->sf10
     sweep measured that law directly (29.7x for 10x data vs the 31.6x
-    the balance equation predicts, sweeps/r11_sf10.json), which is the
+    the balance equation predicts, a3e8e3f:sweeps/r11_sf10.json), which is the
     designed trade, not a plan defect; THIS entry is the linear lever a
     deployment pulls when N^1.5 exceeds the budget.  Granularity/recall
     degrade gracefully as N/K grows (coarser cells, more sub-splits);
@@ -3720,7 +3720,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applyInPandasWithState stream like sessions/join/candles — at
     # session width its MG stage ran 32 state partitions for 8 group
     # keys, 24 of them empty yet each paying ~850 ms of state-store +
-    # Python-worker machinery (sweeps/r14/audit_q_stream_topk.json:
+    # Python-worker machinery (a3e8e3f:sweeps/r14/audit_q_stream_topk.json:
     # one 32-task stage = 27 s of 28 s total task time).  Pin the
     # state partition count like the other stateful streams.
     sink = os.path.join(_sink_root(), f"mgtopk_{next(_SINK_SEQ)}", "out")
@@ -5107,7 +5107,7 @@ def q_degree_assort(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production edge source: banded-MinHash near-dup pairs
     (candidates bounded by LSH banding, linear at corpus scale —
-    PLANS.md §58) feeding the source-agnostic graph operators."""
+    a3e8e3f:PLANS.md §58) feeding the source-agnostic graph operators."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_banded_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
 
@@ -5239,7 +5239,7 @@ _SILHOUETTE_CTES = """e AS (
 def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid-based) silhouette per embedding vector —
     O(N·k), exact integer distance moments, final ratio unrounded
-    (operators/similarity.silhouette_scores; PLANS.md §65)."""
+    (operators/similarity.silhouette_scores; a3e8e3f:PLANS.md §65)."""
     from ..operators.similarity import silhouette_scores
 
     return silhouette_scores(load_table(spark, sf_dir, "embeddings"))
@@ -5260,7 +5260,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster quality summary: member count, 1e-6-unit inertia,
     FLOOR-pattern mean silhouette
-    (operators/similarity.cluster_quality; PLANS.md §65)."""
+    (operators/similarity.cluster_quality; a3e8e3f:PLANS.md §65)."""
     from ..operators.similarity import cluster_quality
 
     return cluster_quality(load_table(spark, sf_dir, "embeddings"))

@@ -504,7 +504,7 @@ ORDER BY s.s_name"""
 
 # Spark-side rewrite of TPCH_Q2 (r12 VERDICT #2: the one second-decade
 # outlier, 11.35x for 10x data).  The sf10 stage audit
-# (sweeps/r13_q2_audit_sf10.json) located the cost: the (partkey,
+# (a3e8e3f:sweeps/r13_q2_audit_sf10.json) located the cost: the (partkey,
 # suppkey) supply aggregation is NEAR-DISTINCT — 59.1M groups from 60M
 # lineitem rows, so the "aggregation" compresses nothing and its hash
 # table is the whole table (5.7 GB spill in the partial stage) — and
